@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -35,3 +36,49 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def kernel_stage_tasks(spark):
+    """Run `action()` under its own Spark job group and return the task
+    count of every completed stage that runs a pandas UDF operator
+    (MapInPandas for functions/grouped.py:apply_per_key,
+    FlatMapGroupsInPandas for a grouped map), read from Spark's status
+    store by job group."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(action):
+        group = f"kernel-stages-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        tasks = []
+        for job in sc.statusTracker().getJobIdsForGroup(group):
+            for sid in sc.statusTracker().getJobInfo(job).stageIds:
+                try:
+                    sd = store.lastStageAttempt(sid)
+                except Py4JJavaError:  # skipped stage: never attempted
+                    continue
+                if sd.status().toString() != "COMPLETE":
+                    continue
+                names, todo = [], [store.operationGraphForStage(sid).rootCluster()]
+                while todo:
+                    c = todo.pop()
+                    names.append(c.name())
+                    it = c.childClusters().iterator()
+                    while it.hasNext():
+                        todo.append(it.next())
+                if any(n.endswith("InPandas") for n in names):
+                    tasks.append(sd.numCompleteTasks())
+        return tasks
+
+    return run

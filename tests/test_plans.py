@@ -2302,24 +2302,32 @@ def test_r14_fullgrid_qc_join_is_not_broadcast(spark, sf_dir):
     assert "SortMergeJoin" in p, p[:2000]
 
 
-def test_r14_grouped_map_exchange_not_coalescible(spark, sf_dir):
-    """The salted grouped-map exchange must be an explicit-numPartitions
-    repartition (REPARTITION_BY_NUM), NOT the bare groupBy's
-    ENSURE_REQUIREMENTS exchange: AQE's byte-based partition coalescing
-    folds a few-hundred-KB per-user point table into one partition and
+def test_r14_grouped_map_exchange_not_coalescible(spark, sf_dir, kernel_stage_tasks):
+    """The grouped-map exchange must be an explicit-numPartitions
+    repartition (REPARTITION_BY_NUM), NOT an ENSURE_REQUIREMENTS
+    exchange: AQE's byte-based partition coalescing folds a
+    few-hundred-KB per-user point table into one partition and
     serializes every numpy kernel onto one core (measured
     error_surface_grid 6.4 s -> 1.8 s at sf0.1 from the exemption;
-    PERF_NOTES r14 session 4). Pin: exactly one REPARTITION_BY_NUM on
-    __salt feeds the FlatMapGroupsInPandas, and no second exchange
-    appears between them."""
+    PERF_NOTES r14 session 4). Pin: exactly one REPARTITION_BY_NUM
+    exchange on hash(user_id) feeds the MapInPandas, with no other
+    exchange between them, and the kernel stage runs
+    spark.sql.shuffle.partitions tasks. Partitioning on the bare
+    user_id instead lets the optimizer drop the repartition behind the
+    upstream window's hashpartitioning(user_id) exchange, which AQE
+    coalesces to one task."""
     from vedb_gaze_spark.plans.queries import QUERIES
 
     df = QUERIES["error_surface_grid"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in p, p[:2000]
-    # the repartition satisfies the grouped map's distribution — the
-    # salt column must appear in exactly ONE exchange
-    assert p.count("hashpartitioning(__salt") == 1, p[:2000]
+    assert p.count("hashpartitioning(hash(user_id") == 1, p[:2000]
+    lines = p.splitlines()
+    kernel = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    feed = next(ln for ln in lines[kernel:] if "Exchange" in ln)
+    assert "hashpartitioning(hash(user_id" in feed, p[:2000]
+    assert "REPARTITION_BY_NUM" in feed, p[:2000]
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert kernel_stage_tasks(df.collect) == [n]
 
 
 def test_r14_spread_scan_gate_is_scale_adaptive(spark, sf_dir):

@@ -1,62 +1,57 @@
-"""Batched per-key applyInPandas.
+"""Per-key pandas kernels: one Python pass per shuffle partition.
 
-applyInPandas pays a fixed Python/Arrow cost per GROUP; with millions of
-small per-user groups that overhead dwarfs the numeric work (measured
-~18 ms/group → 27 s for 1500 trivial TPS fits at sf0.1). Grouping by a
-SALT of the key instead — and looping over the real keys inside one
-pandas call — amortizes that cost across ~n_buckets groups while keeping
-the exact same per-key semantics and parallelism up to n_buckets tasks.
-
-At cluster scale, size n_buckets ≳ 4× executor-core count.
+A grouped pandas UDF pays its Python-worker cost per task, not per key:
+about 0.2 s per non-empty task and 20 ms per empty one (4-core host,
+sf0.1), against well under a second of numeric work for 1,500 TPS fits.
+So the key is hashed into the session's ``spark.sql.shuffle.partitions``
+partitions (at cluster scale the task count follows that setting), and
+one mapInPandas task per partition walks its key-sorted rows, holding
+one Arrow batch plus one key's rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-N_BUCKETS = 128
-
 
 def apply_per_key(
-    df: DataFrame,
-    key: str,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-    n_buckets: int = N_BUCKETS,
+    df: DataFrame, key: str, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: str
 ) -> DataFrame:
-    """Run fn once per distinct value of `key`, batched by key-hash salt."""
+    """Run fn once per distinct non-null value of `key` and concatenate
+    the results. fn gets that key's rows, indexed 0..n-1, in no
+    particular order."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [fn(g) for _, g in pdf.groupby(key, sort=True)]
+    def emit(groups: list[list[pd.DataFrame]]) -> Iterator[pd.DataFrame]:
+        outs = [fn(pd.concat(g, ignore_index=True)) for g in groups]
         outs = [o for o in outs if len(o)]
-        if not outs:
-            return pd.DataFrame({f.split()[0]: [] for f in schema.split(",")})
-        return pd.concat(outs, ignore_index=True)
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
 
-    salted = df.withColumn("__salt", F.pmod(F.hash(key), F.lit(n_buckets)))
-    # Explicit numPartitions repartition on the salt, NOT the bare
-    # groupBy: the grouped map's ENSURE_REQUIREMENTS exchange is subject
-    # to AQE partition COALESCING, which is byte-based — a per-user
-    # point table is a few hundred KB, so AQE folds all buckets into ONE
-    # partition and every numpy kernel runs sequentially on one core
-    # (measured: error_surface_grid 6.4 s → 1.8 s at sf0.1 from this
-    # line alone). The kernels' cost scales with GROUP COUNT, not bytes
-    # — exactly the case byte-based coalescing mis-sizes. An explicit
-    # numPartitions repartition is exempt from coalescing and satisfies
-    # the groupBy's distribution (no second exchange appears).
-    #
-    # 4× partitions over salt values (ADVICE r14): hashing n_buckets
-    # distinct salts into exactly n_buckets partitions leaves ~1/e of
-    # the partitions empty by birthday collision and stacks 2+ salt
-    # groups sequentially in others (effective parallelism ~63% of
-    # n_buckets — guide §2.5's "20-100× more distinct keys than
-    # partitions", seen from the partition side). Hash partitioning on
-    # __salt at ANY partition count still satisfies the groupBy's
-    # distribution and stays exempt from AQE coalescing; the extra
-    # empty partitions are zero-row no-op tasks.
-    salted = salted.repartition(4 * n_buckets, "__salt")
-    return salted.groupBy("__salt").applyInPandas(run, schema=schema)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        held: list[pd.DataFrame] = []  # the last key seen may go on in the next batch
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            k = pdf[key].to_numpy()
+            cuts = [0, *(np.flatnonzero(k[1:] != k[:-1]) + 1), len(pdf)]
+            groups = [[pdf.iloc[s:e]] for s, e in zip(cuts, cuts[1:])]
+            if held and held[0][key].iat[0] == k[0]:
+                groups[0] = held + groups[0]
+            elif held:
+                groups.insert(0, held)
+            held = groups.pop()
+            yield from emit(groups)
+        yield from emit([held] if held else [])
+
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # hash(key), not the bare key: on an input already hashpartitioning(
+    # key, n) (an upstream window) the optimizer drops repartition(n, key)
+    # and the kernels run in one task behind the window's AQE-coalesced
+    # exchange. A numPartitions repartition is exempt from coalescing.
+    keyed = df.where(F.col(key).isNotNull()).repartition(n, F.hash(key))
+    return keyed.sortWithinPartitions(key).mapInPandas(run, schema=schema)

@@ -222,8 +222,8 @@ def calibration_hmd(events: DataFrame) -> DataFrame:
     directions from that eye's fixed position to the scaled targets
     (translations and targets fixed; only the two rotations move).
 
-    Spark-first shape: one bounded per-user group (applyInPandas via
-    the salt-bucketed batcher); inside the group the scale sweep is 50
+    Spark-first shape: one bounded per-user group (apply_per_key in
+    functions/grouped.py); inside the group the scale sweep is 50
     closed-form Kabsch alignments per eye (3×3 SVDs over (n,3)
     bundles), then ONE LM polish per eye on the angular loss at the
     winning scale — the reference re-runs its full bundle adjustment

@@ -243,10 +243,10 @@ def resample_tps(
     same distribution shape as the calibration fits. Grid bounds match
     resample_linear's (ceil(min/step) … floor(max/step)).
 
-    LAPACK-bound — rows-only oracle, like calibration_tps. Groups are
-    salt-batched (functions/grouped.py) — thousands of small per-user
-    groups would otherwise pay the ~18 ms/group applyInPandas fixed cost
-    (measured 6.8 s → 2.9 s at sf0.1's 1500 users).
+    LAPACK-bound — rows-only oracle, like calibration_tps. Users run
+    through functions/grouped.py:apply_per_key, one Python task per
+    shuffle partition, since the Python-worker cost is per task, not
+    per user.
     """
     from vedb_gaze_spark.functions.grouped import apply_per_key
 
