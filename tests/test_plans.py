@@ -2332,15 +2332,24 @@ def test_r14_grouped_map_exchange_not_coalescible(spark, sf_dir, kernel_stage_ta
 
 def test_r14_spread_scan_gate_is_scale_adaptive(spark, sf_dir):
     """spread_scan/spread_scan_scatter fire ONLY when the file layout
-    cannot feed defaultParallelism (splits = files + bytes div
-    maxPartitionBytes): the bench-scale single-split documents table is
-    repartitioned, while the same relation under a tiny
-    maxPartitionBytes (so the planner already admits >= parallelism
-    splits) is returned UNTOUCHED — the no-op-at-scale contract that
-    keeps the helper from adding an exchange on a real multi-split
-    table."""
-    from vedb_gaze_spark.functions.core import spread_scan, spread_scan_scatter
-    from vedb_gaze_spark.sources.tables import load_table
+    packs into fewer scan partitions than defaultParallelism
+    (_scan_partitions, the planner's maxSplitBytes + bin-packing): the
+    bench-scale single-split documents table is repartitioned, while
+    the same relation under a tiny maxPartitionBytes (so the planner
+    already admits >= parallelism splits) is returned UNTOUCHED — the
+    no-op-at-scale contract that keeps the helper from adding an
+    exchange on a real multi-split table. _scan_partitions must equal
+    the planner's own partition count for every table at 128 MB, 1 MB,
+    64 KB and 4 KB maxPartitionBytes."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    from vedb_gaze_spark.functions.core import (
+        _scan_partitions,
+        spread_scan,
+        spread_scan_scatter,
+    )
+    from vedb_gaze_spark.sources.tables import TABLES, load_table
 
     docs = load_table(spark, "documents", sf_dir)
     assert spread_scan(docs, "doc_id") is not docs
@@ -2352,6 +2361,17 @@ def test_r14_spread_scan_gate_is_scale_adaptive(spark, sf_dir):
         docs2 = load_table(spark, "documents", sf_dir)
         assert spread_scan(docs2, "doc_id") is docs2
         assert spread_scan_scatter(docs2, "doc_id") is docs2
+        for maxpb in (128 << 20, 1 << 20, 64 << 10, 4 << 10):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(maxpb))
+            for name in TABLES:
+                df = load_table(spark, name, sf_dir)
+                sizes = [
+                    os.path.getsize(unquote(urlparse(f).path))
+                    for f in df.inputFiles()
+                ]
+                assert _scan_partitions(spark, sizes) == (
+                    df.rdd.getNumPartitions()
+                ), (name, maxpb)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 

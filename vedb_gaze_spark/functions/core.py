@@ -1,10 +1,16 @@
-"""Reusable Column expressions.
+"""Reusable Column expressions and the cross-engine primitives.
 
-Everything here is JVM-side (whole-stage-codegen friendly) and has an exact
-DuckDB twin so the driver's value-hash oracle matches bit-for-bit:
+Every expression here is JVM-side (whole-stage-codegen friendly) and has an
+exact DuckDB twin so the driver's value-hash oracle matches bit-for-bit:
 
-- ``portable_hash60``: first 15 hex chars of md5 as a 60-bit BIGINT. Spark's
-  xxhash64 and DuckDB's hash() disagree, md5 is identical everywhere.
+- the portable 60-bit hash, first 15 hex chars of md5 as an integer
+  (Spark's xxhash64 and DuckDB's hash() disagree, md5 is identical
+  everywhere): ``portable_hash60`` (Spark Column), ``portable_hash60_sql``
+  (Spark SQL text), ``portable_hash60_py`` (Python) and
+  ``portable_hash60_duckdb`` (DuckDB SQL text).
+- the word tokenizer, ``[a-z0-9]+`` runs of the lowercased ``text``:
+  ``TOKENS_SQL`` (Spark SQL), ``TOKEN_RE`` (Python, after ``str.lower()``)
+  and ``TOKENS_DUCKDB`` (DuckDB SQL).
 - ``cents``: exact integer money arithmetic. Summing doubles is
   order-dependent (different partitionings → different last ulps), summing
   BIGINTs is exact and order-independent, so aggregates hash identically on
@@ -16,17 +22,45 @@ DuckDB twin so the driver's value-hash oracle matches bit-for-bit:
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def portable_hash60(col: Column | str) -> Column:
     """60-bit integer hash of a string, identical in Spark and DuckDB.
-
-    Spark:  conv(substring(md5(s), 1, 15), 16, 10)::bigint
-    DuckDB: ('0x' || substring(md5(s), 1, 15))::bigint
-    """
+    Its siblings below are the same function in the other forms; parity
+    is pinned in tests/test_core.py."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def portable_hash60_sql(expr: str) -> str:
+    """portable_hash60 as Spark SQL text over the SQL expression ``expr``."""
+    return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
+
+
+def portable_hash60_py(s: str | bytes) -> int:
+    """portable_hash60 in Python; a ``str`` hashes as its UTF-8 bytes."""
+    if isinstance(s, str):
+        s = s.encode("utf-8")
+    return int(hashlib.md5(s).hexdigest()[:15], 16)
+
+
+def portable_hash60_duckdb(expr: str) -> str:
+    """portable_hash60 as DuckDB SQL text over the SQL expression ``expr``."""
+    return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
+
+
+# Known engine difference (the test corpora are ASCII; pinned in
+# tests/test_core.py): Spark and Python lowercase 'İ' (U+0130) to 'i' +
+# U+0307, DuckDB to 'i', so 'İstanbul' tokenizes to ['i', 'stanbul'] on
+# Spark and in Python but to ['istanbul'] on DuckDB.
+_WORD = "[a-z0-9]+"
+TOKENS_SQL = f"regexp_extract_all(lower(text), '{_WORD}', 0)"
+TOKEN_RE = re.compile(_WORD)
+TOKENS_DUCKDB = f"regexp_extract_all(lower(text), '{_WORD}')"
 
 
 def cents(col: Column | str, scale: int = 100) -> Column:

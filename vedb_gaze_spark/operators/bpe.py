@@ -25,9 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vedb_gaze_spark.functions.core import iter_checkpoint
+from vedb_gaze_spark.functions.core import TOKENS_SQL as _TOKENS, iter_checkpoint
 
-_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
 END = "</w>"
 
 

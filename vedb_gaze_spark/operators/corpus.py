@@ -36,11 +36,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vedb_gaze_spark.functions.core import TOKENS_SQL as _TOKENS
 from vedb_gaze_spark.functions.core import portable_hash60, spread_scan_scatter
 from vedb_gaze_spark.plans import params as P
-
-_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-
 
 
 def _segments(documents: DataFrame, w: int, carry: tuple = ()) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vedb_gaze_spark.functions.core import (
+    TOKENS_SQL,
     iter_checkpoint,
     portable_hash60,
     spread_scan_scatter,
@@ -535,7 +536,7 @@ def dedup_simhash(documents: DataFrame) -> DataFrame:
     scale)."""
     toks = documents.select(
         "doc_id",
-        F.explode(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias("tok"),
+        F.explode(F.expr(TOKENS_SQL)).alias("tok"),
     ).withColumn("h", portable_hash60("tok"))
     bit_sums = [
         F.sum(

@@ -33,9 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vedb_gaze_spark.functions.core import TOKENS_SQL as _TOKS, portable_hash60_sql
 from vedb_gaze_spark.plans import params as P
-
-_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
 
 
 def _round6(expr: str) -> str:
@@ -202,14 +201,9 @@ def qc_score_units_expr(arr: str = "tk") -> str:
     NAME, never an inline tokenizer expression: see the r6 PERF_NOTES
     inline-tokenizer rule)."""
     nw = 2 * P.QC_SCALE + 1
-    bucket = (
-        f"(cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
-        f" % {P.QC_BUCKETS})"
-    )
-    weight = (
-        f"(cast(conv(substring(md5(concat('qcw:', cast({bucket} as string))), 1, 15),"
-        f" 16, 10) as bigint) % {nw} - {P.QC_SCALE})"
-    )
+    bucket = f"({portable_hash60_sql('t')} % {P.QC_BUCKETS})"
+    salted = f"concat('qcw:', cast({bucket} as string))"
+    weight = f"({portable_hash60_sql(salted)} % {nw} - {P.QC_SCALE})"
     return f"cast(aggregate({arr}, 0L, (acc, t) -> acc + {weight}) as long)"
 
 

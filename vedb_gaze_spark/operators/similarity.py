@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vedb_gaze_spark.functions.core import cosine_similarity, iter_checkpoint
+from vedb_gaze_spark.functions.core import (
+    cosine_similarity,
+    iter_checkpoint,
+    portable_hash60_py,
+)
 from vedb_gaze_spark.plans import params as P
 
 
@@ -681,13 +685,9 @@ def rp_signs(
     portable md5 hash (parity of hash60(f'{salt}:{i}:{j}')) so both
     engines — and any future re-derivation — see the identical matrix
     without shipping model state."""
-    import hashlib
 
     def sign(i: int, j: int) -> int:
-        h = int(
-            hashlib.md5(f"{salt}:{i}:{j}".encode()).hexdigest()[:15], 16
-        )
-        return 1 if h % 2 == 0 else -1
+        return 1 if portable_hash60_py(f"{salt}:{i}:{j}") % 2 == 0 else -1
 
     return [[sign(i, j) for i in range(d_in)] for j in range(d_out)]
 
@@ -841,9 +841,10 @@ def ivf_train_centroids(
                 if len(pdf) == 0:
                     continue
                 X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                # round-6 dots before the argmax, same quantization the
-                # expression form applied; first-match tie rule matches
-                # array_position(array_max)
+                # dots rounded to 6 dp, then the first max wins as in
+                # array_position(array_max); not the expression form's
+                # quantization: np.round is half-to-even where Spark's
+                # round is HALF_UP, and the GEMM sums in another order
                 cell = np.round(X @ _C.T, 6).argmax(1)
                 np.add.at(s, cell, X)
                 n += np.bincount(cell, minlength=kk)
@@ -2005,10 +2006,10 @@ def kmeanspar_init(
     always ≤ φ, so this is a SUPERSET with no false negatives — expected
     size ≈ l·(corpus φ / partition φ) ≈ l · n_partitions, model-sized)
     plus one partial-φ row per task; the driver sums the exact φ and
-    applies the exact predicate to the superset. Candidate set, order
-    and arithmetic are bit-identical (the Python md5/fold reproduces
-    portable_hash60 and Spark's streaming double-sum exactly; pinned by
-    the existing determinism tests and measured equal at sf0.1):
+    applies the exact predicate to the superset. Each partition's
+    partial φ and coin flips are bit-identical to a Spark partial sum
+    and portable_hash60; the driver merges the partials in partition
+    order, so the result is deterministic for a fixed partitioning:
     2 jobs/round → 1, isolated init 3.2 s → 1.5 s. The final weighting
     pass is one more corpus scan + a candidate-count groupBy; greedy
     weighted k-means++ and weighted Lloyd's then run on the ≈l·rounds
@@ -2025,8 +2026,6 @@ def kmeanspar_init(
         Ck = C
 
         def fused(batches, _C=Ck, _r=r, _salt=salt, _l=l):
-            import hashlib
-
             import pandas as pd
 
             cn = (_C * _C).sum(1)
@@ -2037,26 +2036,16 @@ def kmeanspar_init(
                 X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
                 d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ _C.T) + cn[None, :]
                 d2 = np.maximum(d2.min(1), 0.0)
-                # left-fold in row order, CONTINUED across batches —
-                # reproduces Spark's streaming per-partition double-sum
-                # bit-for-bit (φ must equal the old agg(sum) exactly)
+                # left fold in row order, continued across batches: the
+                # same bits as Spark's per-partition partial sum (the
+                # merge across partitions happens driver-side)
                 for _x in d2:
                     phi_part += float(_x)
                 ids = pdf["vec_id"].to_numpy()
+                # u = portable_hash60(f"{salt}:{r}:{id}") / 2^60
                 us = np.array(
-                    [
-                        # portable_hash60(f"{salt}:{r}:{id}") / 2^60,
-                        # reproduced byte-for-byte in Python
-                        int(
-                            hashlib.md5(
-                                f"{_salt}:{_r}:{i}".encode()
-                            ).hexdigest()[:15],
-                            16,
-                        )
-                        / float(1 << 60)
-                        for i in ids
-                    ]
-                )
+                    [portable_hash60_py(f"{_salt}:{_r}:{i}") for i in ids]
+                ) / float(1 << 60)
                 keep = (
                     us < _l * d2 / phi_part
                     if phi_part > 0

@@ -14,13 +14,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vedb_gaze_spark.functions.core import (
+    TOKENS_SQL as _TOKENS,
     portable_hash60,
+    portable_hash60_sql,
     spread_scan,
     spread_scan_scatter,
 )
 from vedb_gaze_spark.plans import params as P
-
-_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
 
 
 def token_count(documents: DataFrame) -> DataFrame:
@@ -646,6 +646,7 @@ def hash_embed(documents: DataFrame, dims: int = 64) -> DataFrame:
     inlined the md5 chain into all ``dims`` aggregates — measured 74 s
     at sf0.1 vs ~1 s for this form (the multimodal_phash_dedup lesson,
     PERF_NOTES r5)."""
+    sgn = "concat('sgn:', t)"
     toks = (
         spread_scan(documents, "doc_id")
         .where(F.col("text").isNotNull())
@@ -653,13 +654,9 @@ def hash_embed(documents: DataFrame, dims: int = 64) -> DataFrame:
         .select("doc_id", F.explode(F.expr(_TOKENS)).alias("t"))
         .select(
             "doc_id",
+            F.expr(f"cast({portable_hash60_sql('t')} % {dims} as int)").alias("b"),
             F.expr(
-                f"cast(cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
-                f" % {dims} as int)"
-            ).alias("b"),
-            F.expr(
-                "cast(cast(conv(substring(md5(concat('sgn:', t)), 1, 15), 16, 10)"
-                " as bigint) % 2 * 2 - 1 as long)"
+                f"cast({portable_hash60_sql(sgn)} % 2 * 2 - 1 as long)"
             ).alias("s"),
         )
     )

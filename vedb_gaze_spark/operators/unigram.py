@@ -32,9 +32,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vedb_gaze_spark.functions.core import iter_checkpoint
-
-_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
+from vedb_gaze_spark.functions.core import TOKENS_SQL as _TOKENS, iter_checkpoint
 
 MAX_PIECE_LEN = 6
 SEED_VOCAB = 512

@@ -5,6 +5,8 @@ functions/core.py), identical literals via plans/params.py, identical
 aliases. Tables are pre-registered views named after the parquet files.
 """
 
+from vedb_gaze_spark.functions.core import TOKENS_DUCKDB as _TOKENS_SQL
+from vedb_gaze_spark.functions.core import portable_hash60_duckdb as _h60
 from vedb_gaze_spark.plans import params as P
 
 # floor(x*100 + 0.5) == round for our non-negative 2-decimal money, and is
@@ -1348,13 +1350,6 @@ FROM n
 
 
 # --- text analysis & dedup & similarity (SURVEY §2.G) -----------------------
-
-# Portable 60-bit hash (see functions/core.py:portable_hash60).
-def _h60(expr: str) -> str:
-    return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-_TOKENS_SQL = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
 DEDUP_EXACT = """
 SELECT md5(text) AS content_hash, min(doc_id) AS keep_doc_id, count(*) AS n_docs

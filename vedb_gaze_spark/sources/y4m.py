@@ -36,18 +36,12 @@ computed in integer microseconds — no float drift over long videos).
 from __future__ import annotations
 
 import datetime
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _md5_hash60(b: bytes) -> int:
-    """Python twin of functions/core.py:portable_hash60 — first 15 hex
-    chars of md5 as a 60-bit int, so file-derived user_ids match what
-    a SQL `conv(substring(md5(basename),1,15),16,10)` would assign."""
-    return int(hashlib.md5(b).hexdigest()[:15], 16)
+from vedb_gaze_spark.functions.core import portable_hash60_py
 
 _Y4M_MAGIC = b"YUV4MPEG2"
 
@@ -236,7 +230,7 @@ def _frame_parser(
                 base = fpath.rsplit("/", 1)[-1]
                 uid = umap.get(base)
                 if uid is None:
-                    uid = _md5_hash60(base.encode("utf-8"))
+                    uid = portable_hash60_py(base)
                 buf = bytes(content)
                 hd = parse_y4m_header(buf)
                 w, h = hd["width"], hd["height"]

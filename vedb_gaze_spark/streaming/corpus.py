@@ -16,16 +16,15 @@ per executor.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vedb_gaze_spark.functions.core import TOKEN_RE as _TOKEN_RE
+from vedb_gaze_spark.functions.core import TOKENS_SQL, portable_hash60_py
 from vedb_gaze_spark.plans import params as P
-
-_TOKEN_RE = re.compile(r"[a-z0-9]+")
 
 
 def bench_ngram_set(documents: DataFrame, n: int = P.DECONTAM_NGRAM,
@@ -138,7 +137,6 @@ def streaming_dsir_score(
     (integer-sum determinism makes the parity bit-exact); target-slice
     docs and gramless docs emit nothing, matching the batch inner
     join."""
-    import hashlib
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -154,10 +152,7 @@ def streaming_dsir_score(
                     continue
                 s = 0
                 for g in grams:
-                    h = int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    s += lr.get(h % n_buckets, default_lr)
+                    s += lr.get(portable_hash60_py(g) % n_buckets, default_lr)
                 out_id.append(doc_id)
                 out_s.append(s)
                 out_n.append(len(grams))
@@ -211,7 +206,7 @@ def ccnet_model(
     from vedb_gaze_spark.operators.text import lm_score  # noqa: F401
 
     toks = documents.select(
-        "doc_id", F.explode(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias("word")
+        "doc_id", F.explode(F.expr(TOKENS_SQL)).alias("word")
     )
     wc = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     stats = wc.agg(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from vedb_gaze_spark.functions.core import portable_hash60_sql
 from vedb_gaze_spark.plans import params as P
 from vedb_gaze_spark.sources.signals import with_gaze
 
@@ -769,8 +770,7 @@ def streaming_dedup_minhash_lsh(
     set_expr = (
         "array_sort(array_distinct(transform("
         f"sequence(1, length(t)-{k - 1}), "
-        f"i -> cast(conv(substring(md5(substring(t, i, {k})), 1, 15), 16, 10)"
-        " as bigint))))"
+        f"i -> {portable_hash60_sql(f'substring(t, i, {k})')})))"
     )
     sig_expr = F.array(
         *[
