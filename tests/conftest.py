@@ -39,19 +39,19 @@ def duck():
 
 
 @pytest.fixture(scope="session")
-def kernel_stage_tasks(spark):
-    """Run `action()` under its own Spark job group and return the task
-    count of every completed stage that runs a pandas UDF operator
-    (MapInPandas for functions/grouped.py:apply_per_key,
-    FlatMapGroupsInPandas for a grouped map), read from Spark's status
-    store by job group."""
+def job_group_run(spark):
+    """Run `action()` under its own Spark job group and return
+    `(jobs, stages)` read from Spark's status store by job group: the
+    number of jobs the action launched, and for every completed stage a
+    `(task count, operator names)` pair, the names taken from the
+    stage's operation graph (e.g. "Window", "MapInPandas")."""
     from py4j.protocol import Py4JJavaError
 
     sc = spark.sparkContext
     groups = itertools.count()
 
     def run(action):
-        group = f"kernel-stages-{next(groups)}"
+        group = f"job-group-run-{next(groups)}"
         sc.setJobGroup(group, group)
         try:
             action()
@@ -61,8 +61,9 @@ def kernel_stage_tasks(spark):
         jsc = sc._jsc.sc()
         jsc.listenerBus().waitUntilEmpty()
         store = jsc.statusStore()
-        tasks = []
-        for job in sc.statusTracker().getJobIdsForGroup(group):
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        stages = []
+        for job in jobs:
             for sid in sc.statusTracker().getJobInfo(job).stageIds:
                 try:
                     sd = store.lastStageAttempt(sid)
@@ -77,8 +78,25 @@ def kernel_stage_tasks(spark):
                     it = c.childClusters().iterator()
                     while it.hasNext():
                         todo.append(it.next())
-                if any(n.endswith("InPandas") for n in names):
-                    tasks.append(sd.numCompleteTasks())
-        return tasks
+                stages.append((sd.numCompleteTasks(), names))
+        return len(jobs), stages
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def kernel_stage_tasks(job_group_run):
+    """Task count of every completed stage of `action()` that runs a
+    pandas UDF operator (MapInPandas for
+    functions/grouped.py:apply_per_key, FlatMapGroupsInPandas for a
+    grouped map)."""
+
+    def run(action):
+        _, stages = job_group_run(action)
+        return [
+            tasks
+            for tasks, names in stages
+            if any(n.endswith("InPandas") for n in names)
+        ]
 
     return run

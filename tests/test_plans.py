@@ -2401,3 +2401,23 @@ def test_r14_embed_project_rows_equals_posexplode_of_array_face(spark, sf_dir):
     )
     p = rows._jdf.queryExecution().executedPlan().toString()
     assert "stack(16" in p, p[:2000]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "trade_hits",
+        "trade_pagerank",
+        "dedup_clusters",
+        "quality_classifier_trained",
+        "ann_ivf_kmeanspar",
+    ],
+)
+def test_no_cached_relation_outlives_query(spark, sf_dir, name):
+    """Operators that persist() a relation for their iterations must
+    release it before returning, so nothing a call cached leaks into the
+    CacheManager (where a later call's identical subtree would silently
+    read it instead of running its own plan)."""
+    spark.catalog.clearCache()
+    QUERIES[name](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

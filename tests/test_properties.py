@@ -735,78 +735,61 @@ class TestPagerank:
         assert got == r
         assert got[0] > max(got[i] for i in range(1, 6))
 
-    def test_integer_rank_is_partitioning_invariant(self, spark, sf_dir):
-        """The integer recurrence must yield byte-identical ranks under a
+    @pytest.mark.parametrize("face", ["trade_pagerank", "trade_hits"])
+    def test_integer_rank_is_partitioning_invariant(self, spark, sf_dir, face):
+        """The integer recurrence must yield byte-identical scores under a
         different shuffle layout (the order-independence claim)."""
         from vedb_gaze_spark.operators import graph
         from vedb_gaze_spark.sources.tables import load_table
 
         li = load_table(spark, "lineitem", sf_dir)
         od = load_table(spark, "orders", sf_dir)
-        a = {tuple(r) for r in graph.trade_pagerank(li, od).collect()}
-        b = {
-            tuple(r)
-            for r in graph.trade_pagerank(li.repartition(3), od.repartition(5))
-            .collect()
-        }
+        fn = getattr(graph, face)
+        a = {tuple(r) for r in fn(li, od).collect()}
+        b = {tuple(r) for r in fn(li.repartition(3), od.repartition(5)).collect()}
         assert a == b
 
     def test_rank_join_is_sort_merge_not_broadcast(self, spark, sf_dir):
         """r15: the per-iteration rank join must NOT broadcast the rank
         table (ten sequential broadcast builds were the job floor; and
         at 100 TB node counts broadcast is impossible anyway). The
-        terminal plan segment (after the last lazy checkpoint) carries
-        the last iteration's join — pin it to SortMergeJoin."""
+        returned ranks are a checkpoint scan, so pin one round: over
+        checkpointed inputs its only join is the rank join, and the
+        executed (final adaptive) plan must run it as a SortMergeJoin."""
         from vedb_gaze_spark.operators import graph
         from vedb_gaze_spark.sources.tables import load_table
 
-        df = graph.trade_pagerank(
+        edges = graph.trade_edges(
             load_table(spark, "lineitem", sf_dir),
             load_table(spark, "orders", sf_dir),
         )
+        deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+        ed = edges.join(deg, "s").localCheckpoint()
+        ranks = deg.select(
+            F.col("s").alias("n"), F.lit(graph.PR_R0).cast("long").alias("r")
+        ).localCheckpoint()
+        df = graph._pr_round(ed, ranks)
+        df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
+        assert "BroadcastHashJoin" not in plan
 
 
 class TestHitsShapes:
-    def test_window_and_broadcast_forms_agree_exactly(self, spark, sf_dir):
-        """r15: hits() picks a window-max lazy chain on compact inputs
-        and keeps the r8 eager-checkpoint/broadcast-max shape otherwise
-        (scan_is_compact gate). Both shapes are integer-exact and must
-        produce byte-identical scores; pin equality by forcing the gate
-        both ways on the same edges."""
-        from unittest import mock
-
+    def test_no_window_in_executed_plan(self, spark, sf_dir, job_group_run):
+        """One HITS shape at every scale: max-normalization is a 1-row
+        max attached by broadcast, never a global Window (whose
+        single-partition exchange carries a node-sized table). Checked
+        on every stage the call ran, plan construction included: the
+        returned plan alone is a checkpoint scan."""
         from vedb_gaze_spark.operators import graph
         from vedb_gaze_spark.sources.tables import load_table
 
         li = load_table(spark, "lineitem", sf_dir)
         od = load_table(spark, "orders", sf_dir)
-        with mock.patch.object(graph, "scan_is_compact", return_value=True):
-            compact = sorted(
-                tuple(r) for r in graph.trade_hits(li, od).collect()
-            )
-        with mock.patch.object(graph, "scan_is_compact", return_value=False):
-            large = sorted(
-                tuple(r) for r in graph.trade_hits(li, od).collect()
-            )
-        assert compact == large
-
-    def test_compact_form_is_one_lazy_window_chain(self, spark, sf_dir):
-        """The bench-scale shape: max-normalization via Window (no
-        BroadcastNestedLoopJoin crossJoin of a scalar max anywhere in
-        the terminal plan), which is what lets all 16 half-iterations
-        run inside one action."""
-        from vedb_gaze_spark.operators import graph
-        from vedb_gaze_spark.sources.tables import load_table
-
-        df = graph.trade_hits(
-            load_table(spark, "lineitem", sf_dir),
-            load_table(spark, "orders", sf_dir),
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Window" in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+        _, stages = job_group_run(lambda: graph.trade_hits(li, od).collect())
+        assert stages
+        assert not [names for _, names in stages if "Window" in names]
 
 
 @settings(

@@ -157,55 +157,40 @@ def spread_scan(df, *keys: str):
     no-op. Partition count is defaultParallelism (the cluster's core
     budget), never a hard-coded number; the hash keys keep the
     placement deterministic under task retry (guide §2.5)."""
-    if not scan_is_compact(df):
+    if not _scan_is_compact(df):
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par, *[F.col(k) for k in keys])
 
 
-def scan_is_compact(*dfs) -> bool:
-    """True when the planner would pack the input files of ALL given
-    DataFrames into fewer scan partitions than defaultParallelism —
-    i.e. the source cannot feed every core by itself. This is
-    spread_scan's firing gate, exposed for operator-level strategy
-    choices that depend on the same question (e.g. graph.hits picks its
-    bench-scale normalization shape only when the input is compact).
-    Non-local URIs, un-stat-able sources and fileless plans
-    conservatively return False (the operator keeps its scale shape).
-
-    CACHE CAVEAT: inputFiles() resolves through the optimizer, and the
-    CacheManager substitutes any subtree matching a previously
-    persist()-ed plan with its InMemoryRelation — which reports ZERO
-    files. A gate computed on a derived relation therefore silently
-    flips to False on every call after the first one persisted the same
-    plan (found by the r15 hits test: bench pass 2 would have measured
-    the large-input shape). Call this on the RAW TABLE READS, which are
-    never persisted, not on derived/persisted relations."""
+def _scan_is_compact(df) -> bool:
+    """spread_scan's firing gate: True when the planner would pack the
+    input files of ``df`` into fewer scan partitions than
+    defaultParallelism — i.e. the source cannot feed every core by
+    itself. Non-local URIs, un-stat-able sources and fileless plans
+    conservatively return False. inputFiles() resolves through the
+    CacheManager, so a plan matching a persisted relation reports zero
+    files and the gate reads False."""
     import os as _os
     from urllib.parse import unquote, urlparse
 
-    sizes = []
-    spark = None
-    for df in dfs:
-        try:
-            files = df.inputFiles()
-        except Exception:
-            return False
-        if not files:
-            return False
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("file", ""):
-                return False
-            try:
-                sizes.append(_os.path.getsize(unquote(u.path)))
-            except OSError:
-                return False
-        spark = df.sparkSession
-    if spark is None or not sizes:
+    try:
+        files = df.inputFiles()
+    except Exception:
         return False
-    par = spark.sparkContext.defaultParallelism
-    return _scan_partitions(spark, sizes) < par
+    sizes = []
+    for f in files:
+        u = urlparse(f)
+        if u.scheme not in ("file", ""):
+            return False
+        try:
+            sizes.append(_os.path.getsize(unquote(u.path)))
+        except OSError:
+            return False
+    if not sizes:
+        return False
+    spark = df.sparkSession
+    return _scan_partitions(spark, sizes) < spark.sparkContext.defaultParallelism
 
 
 def _scan_partitions(spark, sizes: list[int]) -> int:

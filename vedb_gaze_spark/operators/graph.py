@@ -1,6 +1,7 @@
 """Iterative graph analytics over relational edges — PageRank on the
-customer↔supplier trade graph (Page et al. 1999), the second iterative
-dataflow family next to the dedup connected-components solver.
+customer↔supplier trade graph (Page et al. 1999) and HITS on its
+directed form (Kleinberg 1999), the second iterative dataflow family
+next to the dedup connected-components solver.
 
 Exactness design: ranks are integer micro-units end-to-end —
 r₀ = 1e6, contribution = r div out_degree (integer floor division),
@@ -12,12 +13,17 @@ formulation would drift in the last ulps across partitionings; the
 integer recurrence is the lm_score micro-nat trick applied to an
 iterative fixpoint.
 
-Scale shape: the edge list with degrees is computed once, cached, and
-repartitioned on the source key; each iteration shuffles only the
-node-sized rank table into the edge partitions (edges never move
-again), aggregates map-side, and localCheckpoints every few rounds to
-truncate lineage (the dedup_clusters lesson). The driver holds nothing
-— no collect anywhere in the loop.
+Scale shape: the edge list with degrees is computed once and persisted
+for the call; each iteration shuffles only the node-sized rank table
+into a sort-merge join whose edge side is one reused exchange, and
+lazy localCheckpoints every few rounds (and on the final round)
+truncate lineage (the dedup_clusters lesson). HITS has the same
+shape, with one scalar max per half-iteration attached by broadcast
+(one plan at every scale — hits()). The driver holds nothing — no
+collect anywhere in the loop. Each operator unpersists its edge
+relation before returning: the returned plan reads only checkpointed
+relations, so no cached relation outlives the query and every call
+runs the same jobs.
 """
 
 from __future__ import annotations
@@ -25,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vedb_gaze_spark.functions.core import iter_checkpoint, scan_is_compact
+from vedb_gaze_spark.functions.core import iter_checkpoint
 
 PR_ITERS = 10
 PR_DAMP_PCT = 85            # damping 0.85 as exact percent arithmetic
@@ -56,44 +62,52 @@ def trade_edges(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     )
 
 
+def _pr_round(ed: DataFrame, ranks: DataFrame) -> DataFrame:
+    """One exact PageRank iteration over the degree-annotated edges."""
+    # hint("merge") on the node-sized rank side (r15, guide §3.1):
+    # without it the planner broadcasts the ranks each iteration — ten
+    # sequential BroadcastExchange builds, each a driver round-trip
+    # barrier. As a sort-merge join the edge side's exchange is ONE
+    # reused shuffle (identical subtree over the persisted relation
+    # every iteration → ReusedExchange) and each iteration only
+    # shuffles the node-sized rank table; output byte-identical
+    # (integer arithmetic untouched). This is also the only strategy
+    # available at 100 TB node counts, where the rank table exceeds any
+    # broadcast cap.
+    return (
+        ed.join(ranks.hint("merge"), ed["s"] == ranks["n"])
+        .select("d", F.expr("r div deg").alias("c"))
+        .groupBy("d")
+        .agg(F.sum("c").alias("sc"))
+        .select(
+            F.col("d").alias("n"),
+            (
+                F.lit(PR_TELEPORT) + F.expr(f"({PR_DAMP_PCT} * sc) div 100")
+            ).cast("long").alias("r"),
+        )
+    )
+
+
 def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """(n, r): integer micro-unit PageRank after ``iters`` exact
     iterations. Every node in a symmetric edge list has in- and
-    out-degree ≥ 1, so there are no dangling nodes to redistribute."""
+    out-degree ≥ 1, so there are no dangling nodes to redistribute.
+    Measured 27 Spark jobs on every call at sf0.1 (bench session
+    defaults), 36 at sf0.01 with 8 shuffle partitions."""
     deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # deg is node-sized — AQE broadcasts it, so the edge list is built
-    # without an extra shuffle. No repartition(s): the per-iteration
-    # rank join is itself a node-sized broadcast, so edge partitioning
-    # buys nothing and the explicit shuffle was pure cost.
+    # without an extra shuffle. No repartition(s): the rank join's edge
+    # side is one reused exchange, so a pre-partitioning shuffle would
+    # be pure cost.
     ed = edges.join(deg, "s").persist()
     ranks = deg.select(F.col("s").alias("n"), F.lit(PR_R0).cast("long").alias("r"))
     for i in range(iters):
-        # hint("merge") on the node-sized rank side (r15, guide §3.1):
-        # without it the planner broadcasts the ranks each iteration —
-        # ten sequential BroadcastExchange builds, each a driver
-        # round-trip barrier. As a sort-merge join the edge side's
-        # exchange is ONE reused shuffle (identical subtree over the
-        # persisted relation every iteration → ReusedExchange) and each
-        # iteration only shuffles the node-sized rank table — measured
-        # 35 → 17 jobs, 7.3 → 6.5 s best isolated at sf0.1, output
-        # byte-identical (integer arithmetic untouched). This is also
-        # the only strategy available at 100 TB node counts, where the
-        # rank table exceeds any broadcast cap.
-        ranks = (
-            ed.join(ranks.hint("merge"), ed["s"] == ranks["n"])
-            .select("d", F.expr("r div deg").alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("sc"))
-            .select(
-                F.col("d").alias("n"),
-                (
-                    F.lit(PR_TELEPORT)
-                    + F.expr(f"({PR_DAMP_PCT} * sc) div 100")
-                ).cast("long").alias("r"),
-            )
-        )
-        if (i + 1) % 3 == 0:
+        ranks = _pr_round(ed, ranks)
+        # the final round is checkpointed too, so the returned plan
+        # reads no persisted relation and ed can be released below
+        if (i + 1) % 3 == 0 or i == iters - 1:
             ranks = iter_checkpoint(ranks, eager=False)
+    ed.unpersist()
     return ranks
 
 
@@ -127,9 +141,25 @@ def trade_edges_directed(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     )
 
 
-def hits(
-    edges: DataFrame, iters: int = HITS_ITERS, compact: bool | None = None
-) -> DataFrame:
+def _max_normalized(raw: DataFrame, key: str, name: str) -> DataFrame:
+    """(n, name): each raw score scaled to micro-units of the table's
+    max. The 1-row max is attached by a broadcast cross join — the
+    scale-safe way to attach a global aggregate without a total
+    exchange. Both the raw table (read twice: by the max and by the
+    scaling) and the result are lazily checkpointed, so no later
+    action re-derives the chain behind them."""
+    raw = iter_checkpoint(raw, eager=False)
+    mx = raw.agg(F.max("raw").alias("mx"))
+    return iter_checkpoint(
+        raw.crossJoin(F.broadcast(mx)).select(
+            F.col(key).alias("n"),
+            F.expr(f"(raw * {HITS_SCALE}) div mx").cast("long").alias(name),
+        ),
+        eager=False,
+    )
+
+
+def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     """Integer-exact HITS (Kleinberg 1999, "Authoritative sources in a
     hyperlinked environment"): authority = Σ hub over in-edges, hub =
     Σ authority over out-edges, each renormalized per half-iteration.
@@ -142,130 +172,47 @@ def hits(
     (the same iterations unrolled as CTEs, like trade_pagerank's)
     matches hash-for-hash.
 
-    Scale shape: edges cached once; each half-iteration shuffles only
-    the node-sized score table.
-
-    Two value-identical normalization shapes, picked by the spread_scan
-    input gate (r15, guide §2.6/§5 — the job-floor amortization VERDICT
-    r14 #1 asked for):
-
-    - COMPACT input (bench scale, scan_is_compact): the per-half-
-      iteration max rides a global window (one exact max over the
-      node-sized raw table), so the whole ``iters``-round recurrence is
-      ONE lazy chain — every score table is referenced exactly once, so
-      the plan grows linearly and a single action executes all rounds
-      with zero per-round driver barriers (measured 88 → 36 jobs,
-      10.5 → 6.1 s best isolated at sf0.1; scores byte-identical —
-      integer sums, one exact max, same div). Each score table is
-      lazily localCheckpoint-ed so the final union's auth branch reads
-      the rounds materialized by the hubs chain instead of re-deriving
-      them. The window's single-partition exchange carries a NODE-sized
-      table — fine when the input itself is compact, wrong for huge
-      graphs, hence the gate.
-    - LARGE input: the r8 shape — eager node-sized checkpoint of each
-      raw table, scalar max broadcast-joined back. The checkpoint is
-      what stops every scalar-max job from re-evaluating the whole
-      chain (measured 42 s → 7.5 s at sf0.1 when it landed); the
-      broadcast of a 1-row max is the only scale-safe way to attach a
-      global aggregate without a total exchange."""
-    # ``compact``: callers that know the raw sources should gate there
-    # (trade_hits does) — inputFiles() on a derived plan resolves
-    # through the CacheManager, and once one call has persist()-ed the
-    # edge relation, every later call's identical subtree substitutes to
-    # the (fileless) InMemoryRelation and the gate silently flips to the
-    # large-input shape (see scan_is_compact's cache caveat; caught by
-    # TestHitsShapes). The fallback gate here still serves fresh-plan
-    # callers.
-    if compact is None:
-        compact = scan_is_compact(edges)
+    One plan shape at every scale: the edge relation is persisted for
+    the call; each half-iteration shuffles only the node-sized score
+    table into ``raw = groupBy(edges ⋈ scores)`` and max-normalizes it
+    (_max_normalized). No global window (its single-partition exchange
+    would carry a node-sized table) and no eager checkpoint. Measured
+    72 Spark jobs on every call at sf0.1 (bench session defaults) and
+    at sf0.01 with 8 shuffle partitions."""
     ed = edges.persist()
     hubs = ed.select("h").distinct().select(
         F.col("h").alias("n"), F.lit(HITS_SCALE).cast("long").alias("hub")
     )
     auth = None
-    if compact:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy()
-        for i in range(iters):
-            a_raw = (
-                ed.join(hubs, ed["h"] == hubs["n"])
-                .groupBy("a")
-                .agg(F.sum("hub").alias("raw"))
-            )
-            auth = iter_checkpoint(
-                a_raw.withColumn("mx", F.max("raw").over(w)).select(
-                    F.col("a").alias("n"),
-                    F.expr(f"(raw * {HITS_SCALE}) div mx")
-                    .cast("long")
-                    .alias("auth"),
-                ),
-                eager=False,
-            )
-            h_raw = (
-                ed.join(auth, ed["a"] == auth["n"])
-                .groupBy("h")
-                .agg(F.sum("auth").alias("raw"))
-            )
-            # hubs deliberately NOT checkpointed inside the loop: the
-            # chain references each hubs exactly once, and every lazy
-            # checkpoint cuts the plan into another separately-executed
-            # segment (measured: checkpointing both tables per round
-            # doubled the job count, 36 → 90). Only auth needs the cut —
-            # it is the one table referenced twice (next half-iteration
-            # AND the final union).
-            hubs = h_raw.withColumn("mx", F.max("raw").over(w)).select(
-                F.col("h").alias("n"),
-                F.expr(f"(raw * {HITS_SCALE}) div mx").cast("long").alias("hub"),
-            )
-        return hubs.select(
-            F.col("n").alias("node_id"), F.col("hub").alias("score_units")
-        ).unionByName(
-            auth.select(
-                F.col("n").alias("node_id"), F.col("auth").alias("score_units")
-            )
-        )
-    for i in range(iters):
-        a_raw = iter_checkpoint(
+    for _ in range(iters):
+        auth = _max_normalized(
             ed.join(hubs, ed["h"] == hubs["n"])
             .groupBy("a")
             .agg(F.sum("hub").alias("raw")),
-            eager=True,
+            "a",
+            "auth",
         )
-        a_mx = a_raw.agg(F.max("raw").alias("mx"))
-        auth = a_raw.crossJoin(F.broadcast(a_mx)).select(
-            F.col("a").alias("n"),
-            F.expr(f"(raw * {HITS_SCALE}) div mx").cast("long").alias("auth"),
-        )
-        h_raw = iter_checkpoint(
+        hubs = _max_normalized(
             ed.join(auth, ed["a"] == auth["n"])
             .groupBy("h")
             .agg(F.sum("auth").alias("raw")),
-            eager=True,
+            "h",
+            "hub",
         )
-        h_mx = h_raw.agg(F.max("raw").alias("mx"))
-        hubs = h_raw.crossJoin(F.broadcast(h_mx)).select(
-            F.col("h").alias("n"),
-            F.expr(f"(raw * {HITS_SCALE}) div mx").cast("long").alias("hub"),
-        )
-    return hubs.select(
+    scores = hubs.select(
         F.col("n").alias("node_id"), F.col("hub").alias("score_units")
     ).unionByName(
-        auth.select(
-            F.col("n").alias("node_id"), F.col("auth").alias("score_units")
-        )
+        auth.select(F.col("n").alias("node_id"), F.col("auth").alias("score_units"))
     )
+    # safe: every table the returned plan reads is checkpointed
+    ed.unpersist()
+    return scores
 
 
 def trade_hits(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """Registry face: hub scores for customers, authority scores for
-    suppliers, over the directed trade graph. The normalization-shape
-    gate is computed on the RAW table scans (never persisted), not on
-    the derived edge relation — see scan_is_compact's cache caveat."""
-    scores = hits(
-        trade_edges_directed(lineitem, orders),
-        compact=scan_is_compact(lineitem, orders),
-    )
+    suppliers, over the directed trade graph."""
+    scores = hits(trade_edges_directed(lineitem, orders))
     return scores.select(
         "node_id",
         F.when(F.col("node_id") % 2 == 0, "customer")
