@@ -1,14 +1,17 @@
-"""One definition per cross-engine primitive (functions/core.py).
+"""One definition per cross-engine primitive.
 
-The portable 60-bit hash and the word tokenizer each have one form per
-engine. Every form must agree on a fixed string set, and no module may
-carry its own copy of either.
+The portable 60-bit hash and the word tokenizer (functions/core.py) each
+have one form per engine. Every form must agree on a fixed string set,
+and no module may carry its own copy of either. The exact-Jaccard score
+every near-dup verify uses has one definition too
+(operators/dedup.py:_exact_jaccard).
 """
 
 import re
 from pathlib import Path
 
 import duckdb
+import numpy as np
 from pyspark.sql import functions as F
 
 from vedb_gaze_spark.functions.core import (
@@ -20,6 +23,7 @@ from vedb_gaze_spark.functions.core import (
     portable_hash60_py,
     portable_hash60_sql,
 )
+from vedb_gaze_spark.operators.dedup import _exact_jaccard
 
 STRINGS = [
     "",
@@ -96,3 +100,40 @@ def test_primitives_are_not_copied_outside_core():
         if copy.search(line)
     ]
     assert hits == [], "\n".join(hits)
+
+
+def test_exact_jaccard_rounds_half_up_like_duckdb():
+    """1 shared element in a union of 128: 1/128 = 0.0078125 exactly.
+    DuckDB's round() gives 0.007813 (HALF_UP); Python's round and
+    np.round give 0.007812 (half-to-even)."""
+    a = np.array([0], dtype=np.int64)
+    b = np.arange(128, dtype=np.int64)
+    con = duckdb.connect()
+    try:
+        want = con.execute("SELECT round(1 / 128.0, 6)").fetchone()[0]
+    finally:
+        con.close()
+    assert float(want) == 0.007813
+    assert _exact_jaccard(a, b) == 0.007813
+    assert round(1 / 128, 6) == np.round(1 / 128, 6) == 0.007812
+
+
+def test_exact_jaccard_is_symmetric():
+    a = np.array([1, 4, 9, 16, 25, 36], dtype=np.int64)
+    b = np.array([2, 4, 8, 16, 32], dtype=np.int64)
+    assert _exact_jaccard(a, b) == _exact_jaccard(b, a) == 0.222222
+    assert _exact_jaccard(a, a) == 1.0
+
+
+def test_jaccard_merge_is_not_copied():
+    """The searchsorted-then-count Jaccard merge appears once under
+    vedb_gaze_spark/, inside _exact_jaccard."""
+    pkg = Path(__file__).resolve().parents[1] / "vedb_gaze_spark"
+    merge = re.compile(r"np\.searchsorted\(.*\n(?:.*\n){0,2}.*count_nonzero")
+    hits = [
+        f"{path.relative_to(pkg)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for path in sorted(pkg.rglob("*.py"))
+        for text in [path.read_text()]
+        for m in merge.finditer(text)
+    ]
+    assert len(hits) == 1 and hits[0].startswith("operators/dedup.py:"), hits

@@ -247,14 +247,12 @@ def test_corpus_stats_median_is_histogram_not_full_sort(spark, sf_dir):
 def test_no_driver_collect_in_operators():
     """No registered query may materialize DATA on the driver: a
     .collect() inside an operator is a corpus-sized driver OOM at 100 TB.
-    Allowed sites: the explicitly opt-in broadcast-index verify path
-    (unused by queries()), and k-means training, which collects O(k·dim)
-    MODEL STATE per iteration (the MLlib iterative pattern), never rows
-    of the corpus."""
+    Allowed sites: k-means training, which collects O(k·dim) MODEL STATE
+    per iteration (the MLlib iterative pattern), never rows of the
+    corpus."""
     import pathlib
 
     allowed = (
-        "def _verify_jaccard_broadcast",
         "def ivf_train_centroids",
         # static benchmark n-gram set for streaming decontamination:
         # collects O(eval-suite) n-grams once, never corpus rows
@@ -478,21 +476,27 @@ def test_jaccard_grid_autosizes_with_cluster_and_corpus(spark):
 
 
 def test_jaccard_verify_strategies_agree(spark, sf_dir):
-    """The three verification physical strategies (grid cogroup, equi
-    join, opt-in broadcast index) implement ONE semantics — identical
-    (doc_a, doc_b, jaccard) sets on the same candidates. Guards the
-    r2 strategy rework: a divergence means a pairing/rounding bug in
-    exactly one path."""
+    """The two verification physical strategies (grid cogroup for
+    dedup_ngram_jaccard, equi-join for the MinHash operators) implement
+    ONE semantics — identical (doc_a, doc_b, jaccard) sets on the same
+    candidates. Both score through _exact_jaccard, so a divergence means
+    a pairing bug in exactly one path."""
     from vedb_gaze_spark.operators import dedup
+    from vedb_gaze_spark.plans import params as P
     from vedb_gaze_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", sf_dir)
-    outs = {
-        s: {tuple(r) for r in dedup.dedup_ngram_jaccard(docs, verify=s).collect()}
-        for s in ("grid", "join", "broadcast_index")
+    ds = dedup._doc_sets(docs)
+    pairs = dedup._candidate_pairs(
+        dedup._prefix_shingles(ds, P.JACCARD_THRESHOLD), P.JACCARD_THRESHOLD
+    )
+    grid = {
+        tuple(r)
+        for r in dedup._verify_jaccard_grid(pairs, ds, docs.count()).collect()
     }
-    assert outs["grid"] == outs["join"] == outs["broadcast_index"]
-    assert len(outs["grid"]) > 0
+    join = {tuple(r) for r in dedup._verify_jaccard(pairs, ds).collect()}
+    assert grid == join
+    assert len(grid) > 0
 
 
 def test_sampled_recall_pairs_are_full_pairs_restricted_to_sample(
@@ -703,13 +707,14 @@ def test_bucketed_doc_sets_make_verify_join_shuffle_free_on_doc_side(
     spark, sf_dir, tmp_path
 ):
     """The nightly-rerun dedup shape: doc sets persisted bucketed by
-    doc_id are probed by BOTH pair-verify equi-joins (doc_a and doc_b)
-    without ever shuffling the doc-set side — the corpus-sized relation
-    crosses the wire zero times on a rerun. Verified two ways: the
-    executed bucketed plan carries at least two fewer Exchanges than the
-    unbucketed plan over identical candidates, and no Exchange sits
-    between the bucketed scans and their joins. Results must be
-    identical to the unbucketed run."""
+    doc_id. dedup_ngram_jaccard then skips the corpus hash and the
+    doc_id exchange that builds the sets, so its executed bucketed plan
+    carries at least two fewer shuffle Exchanges than the unbucketed
+    plan over identical candidates (its grid verify still shuffles each
+    doc set onto its cells). dedup_minhash_lsh's pair-verify equi-joins
+    (doc_a and doc_b) probe the bucketed doc-set side without shuffling
+    it, so its plan also loses Exchanges. Results must be identical to
+    the unbucketed runs."""
     from vedb_gaze_spark.operators import dedup
     from vedb_gaze_spark.sources.bucketing import write_doc_sets_bucketed
     from vedb_gaze_spark.sources.tables import load_table
@@ -730,9 +735,9 @@ def test_bucketed_doc_sets_make_verify_join_shuffle_free_on_doc_side(
 
             return len(re.findall(r"(?<!Broadcast)(?<!Reused)Exchange hashpartitioning", s)), s
 
-        plain = dedup.dedup_ngram_jaccard(docs, verify="join")
+        plain = dedup.dedup_ngram_jaccard(docs)
         bucketed = dedup.dedup_ngram_jaccard(
-            docs, verify="join", doc_sets=spark.table("vbuckets.doc_sets")
+            docs, doc_sets=spark.table("vbuckets.doc_sets")
         )
         n_plain, _ = exchanges(plain)
         n_bucketed, s_bucketed = exchanges(bucketed)

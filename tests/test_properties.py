@@ -109,7 +109,7 @@ def test_ppjoin_filters_lose_no_true_pair(spark, texts):
     sets = {r["doc_id"]: set(r["s"]) for r in dedup._doc_sets(df).collect()}
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.dedup_ngram_jaccard(df, verify="join").collect()
+        for r in dedup.dedup_ngram_jaccard(df).collect()
     }
     want = {}
     ids = sorted(sets)

@@ -164,13 +164,13 @@ def spread_scan(df, *keys: str):
 
 
 def _scan_is_compact(df) -> bool:
-    """spread_scan's firing gate: True when the planner would pack the
-    input files of ``df`` into fewer scan partitions than
-    defaultParallelism — i.e. the source cannot feed every core by
-    itself. Non-local URIs, un-stat-able sources and fileless plans
-    conservatively return False. inputFiles() resolves through the
-    CacheManager, so a plan matching a persisted relation reports zero
-    files and the gate reads False."""
+    """The firing gate of spread_scan and spread_scan_scatter: True when
+    the planner would pack the input files of ``df`` into fewer scan
+    partitions than defaultParallelism — i.e. the source cannot feed
+    every core by itself. Non-local URIs, un-stat-able sources and
+    fileless plans conservatively return False. inputFiles() resolves
+    through the CacheManager, so a plan matching a persisted relation
+    reports zero files and the gate reads False."""
     import os as _os
     from urllib.parse import unquote, urlparse
 
@@ -266,8 +266,7 @@ def spread_scan_scatter(df, key: str):
     once (measured: dedup_minhash_lsh 6.2 s → 21 s with the aligned
     form inside _doc_sets, back to 2.9 s with this one). Same
     input-size gate: no-op whenever the scan already feeds the cores."""
-    out = spread_scan(df, key)
-    if out is df:
+    if not _scan_is_compact(df):
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par, F.xxhash64(F.col(key)))

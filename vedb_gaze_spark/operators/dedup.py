@@ -19,8 +19,10 @@ Scale design:
 from __future__ import annotations
 
 import logging
+import math
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -66,25 +68,41 @@ def _doc_sets(documents: DataFrame) -> DataFrame:
     )
 
 
+def _exact_jaccard(sa: np.ndarray, sb: np.ndarray) -> float:
+    """Exact Jaccard of two SORTED int64 shingle arrays — the one score
+    every near-dup verify uses (_verify_jaccard, _verify_jaccard_grid,
+    streaming/stateful.py:_make_minhash_lsh_fn).
+
+    |A∩B| comes from a numpy searchsorted merge of the smaller array
+    into the larger. Why not per-row JVM array_intersect: it rebuilds a
+    hash set per pair (measured sf0.1: ~45 s for 9.7 M candidates vs
+    ~8 s for the numpy merge). Rounding is floor(x·1e6+0.5)/1e6 —
+    HALF_UP for non-negative x, matching both engines' round() on these
+    values (1/128 → 0.007813, where Python's and numpy's half-to-even
+    round give 0.007812)."""
+    if len(sa) > len(sb):
+        sa, sb = sb, sa
+    pos = np.searchsorted(sb, sa)
+    ok = pos < len(sb)
+    inter = int(np.count_nonzero(sb[pos[ok]] == sa[ok]))
+    return math.floor(inter / (len(sa) + len(sb) - inter) * 1e6 + 0.5) / 1e6
+
+
 def _verify_jaccard(pairs: DataFrame, doc_sets: DataFrame) -> DataFrame:
     """Exact Jaccard for the given candidate (doc_a < doc_b) pairs — the
-    scale-safe equi-join verification path for MODERATE candidate counts.
+    equi-join verify form, used by dedup_minhash_lsh and
+    dedup_minhash_incremental at their tens-of-thousands candidate
+    volumes.
 
     Plain equi-joins (no hints, no driver state): each pair joins its two
     per-doc SORTED shingle arrays (doc_sets = _doc_sets output) on
-    doc_id, then a vectorized numpy searchsorted merge scores each joined
-    row inside mapInPandas. The doc-set side shards by doc_id at any
-    corpus size; AQE still picks a broadcast-hash join when the side is
-    genuinely small (it is at sf0.1), so small-scale speed is free rather
-    than hard-coded.
-
-    Why not per-row JVM array_intersect: it rebuilds a hash set per pair
-    (measured sf0.1: ~45 s for 9.7 M candidates vs ~8 s for the numpy
-    merge). Why not a row-per-shingle join: |pairs|·|doc set| rows —
-    measured 2×10⁹ intermediates / 435 s. Rounding is
-    floor(x·1e6+0.5)/1e6 — HALF_UP for non-negative x, matching both
-    engines' round() on these values (power-of-two denominators are
-    exact in binary)."""
+    doc_id, then _exact_jaccard scores each joined row inside
+    mapInPandas. The doc-set side shards by doc_id at any corpus size,
+    so a doc_id-bucketed doc-set table is probed without exchanging it;
+    AQE still picks a broadcast-hash join when the side is genuinely
+    small (it is at sf0.1), so small-scale speed is free rather than
+    hard-coded. Why not a row-per-shingle join: |pairs|·|doc set| rows —
+    measured 2×10⁹ intermediates / 435 s."""
     a = doc_sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("set_a"))
     b = doc_sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("set_b"))
     joined = (
@@ -95,29 +113,25 @@ def _verify_jaccard(pairs: DataFrame, doc_sets: DataFrame) -> DataFrame:
     thr = P.JACCARD_THRESHOLD
 
     def run(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            jac = np.empty(n)
-            col_a, col_b = pdf["set_a"], pdf["set_b"]
-            for i in range(n):
-                sa = np.asarray(col_a.iloc[i], dtype=np.int64)
-                sb = np.asarray(col_b.iloc[i], dtype=np.int64)
-                if len(sa) > len(sb):
-                    sa, sb = sb, sa
-                pos = np.searchsorted(sb, sa)
-                ok = pos < len(sb)
-                inter = int(np.count_nonzero(sb[pos[ok]] == sa[ok]))
-                jac[i] = inter / (len(sa) + len(sb) - inter)
-            jr = np.floor(jac * 1e6 + 0.5) / 1e6
-            keep = jr >= thr
+            jac = np.fromiter(
+                (
+                    _exact_jaccard(
+                        np.asarray(sa, dtype=np.int64), np.asarray(sb, dtype=np.int64)
+                    )
+                    for sa, sb in zip(pdf["set_a"], pdf["set_b"])
+                ),
+                dtype=np.float64,
+                count=len(pdf),
+            )
+            keep = jac >= thr
             yield pd.DataFrame(
                 {
                     "doc_a": pdf["doc_a"].to_numpy()[keep],
                     "doc_b": pdf["doc_b"].to_numpy()[keep],
-                    "jaccard": jr[keep],
+                    "jaccard": jac[keep],
                 }
             )
 
@@ -254,8 +268,6 @@ def _verify_grid_size(
     The max of the two bounds wins; replication cost grows only as
     O(sqrt(cells)), so oversizing is cheap while undersizing is an
     executor OOM at 100×."""
-    import math
-
     par = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     g = math.ceil(math.sqrt(max(par, 1)))
     if n_docs:
@@ -264,13 +276,10 @@ def _verify_grid_size(
 
 
 def _verify_jaccard_grid(
-    pairs: DataFrame,
-    doc_sets: DataFrame,
-    grid: int | None = None,
-    n_docs: int | None = None,
+    pairs: DataFrame, doc_sets: DataFrame, n_docs: int
 ) -> DataFrame:
     """Exact Jaccard verify for HIGH candidate volumes — block-replicated
-    cogroup, no driver state.
+    cogroup, no driver state; the verify form of dedup_ngram_jaccard.
 
     The equi-join form (_verify_jaccard) ships BOTH doc-set arrays per
     pair: |pairs|·2·|set| bytes (measured sf0.1: 3 M candidates × ~1.6 KB
@@ -279,15 +288,14 @@ def _verify_jaccard_grid(
     hash(doc_b)%B) — and each doc's sorted array ships A+B times with a
     role tag, INDEPENDENT of pair count: |pairs|·16 B + |sets|·(A+B).
     Inside each of the A·B cogroup cells a dict of that cell's sets
-    rebuilds locally and the same numpy searchsorted merge scores the
-    cell's pairs. A and B are DERIVED (_verify_grid_size) from the
-    configured parallelism and the corpus size so cell payload is bounded
-    at any scale (cells are uniform by construction); this is the classic
+    rebuilds locally and _exact_jaccard scores the cell's pairs. A and B
+    are DERIVED (_verify_grid_size) from the configured parallelism and
+    the corpus size ``n_docs`` so cell payload is bounded at any scale
+    (cells are uniform by construction); this is the classic
     block-nested replication join."""
-    import numpy as np
     import pandas as pd
 
-    A = B = grid or _verify_grid_size(pairs.sparkSession, n_docs)
+    A = B = _verify_grid_size(pairs.sparkSession, n_docs)
     thr = P.JACCARD_THRESHOLD
     pk = pairs.select(
         "doc_a",
@@ -323,19 +331,14 @@ def _verify_jaccard_grid(
             (da if role == 0 else db)[doc] = np.asarray(s, dtype=np.int64)
         aa = left["doc_a"].to_numpy()
         bb = left["doc_b"].to_numpy()
-        jac = np.empty(len(aa))
-        for i in range(len(aa)):
-            sa, sb = da[aa[i]], db[bb[i]]
-            if len(sa) > len(sb):
-                sa, sb = sb, sa
-            pos = np.searchsorted(sb, sa)
-            ok = pos < len(sb)
-            inter = int(np.count_nonzero(sb[pos[ok]] == sa[ok]))
-            jac[i] = inter / (len(sa) + len(sb) - inter)
-        jr = np.floor(jac * 1e6 + 0.5) / 1e6
-        keep = jr >= thr
+        jac = np.fromiter(
+            (_exact_jaccard(da[a], db[b]) for a, b in zip(aa, bb)),
+            dtype=np.float64,
+            count=len(aa),
+        )
+        keep = jac >= thr
         return pd.DataFrame(
-            {"doc_a": aa[keep], "doc_b": bb[keep], "jaccard": jr[keep]}
+            {"doc_a": aa[keep], "doc_b": bb[keep], "jaccard": jac[keep]}
         )
 
     return (
@@ -345,56 +348,8 @@ def _verify_jaccard_grid(
     )
 
 
-def _verify_jaccard_broadcast(pairs: DataFrame, doc_sets: DataFrame) -> DataFrame:
-    """OPT-IN small-corpus fast path (NOT the default — it collects a
-    doc_id → sorted-shingle-array index to the driver, which only fits
-    when the corpus is known to be small): exact Jaccard via a broadcast
-    index + the same numpy searchsorted merge as _verify_jaccard. Saves
-    the two doc_id joins and ships only (doc_a, doc_b) rows to Python.
-    Use from notebooks/tests on bounded corpora; registered queries use
-    _verify_jaccard, which has no driver state at any scale."""
-    import numpy as np
-
-    spark = pairs.sparkSession
-    index = {
-        int(r["doc_id"]): np.asarray(r["s"], dtype=np.int64)
-        for r in doc_sets.collect()
-    }
-    bc = spark.sparkContext.broadcast(index)
-    thr = P.JACCARD_THRESHOLD
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        sets = bc.value
-        for pdf in batches:
-            aa = pdf["doc_a"].to_numpy()
-            bb = pdf["doc_b"].to_numpy()
-            jac = np.empty(len(aa))
-            for i in range(len(aa)):
-                sa, sb = sets[aa[i]], sets[bb[i]]
-                if len(sa) > len(sb):
-                    sa, sb = sb, sa
-                pos = np.searchsorted(sb, sa)
-                ok = pos < len(sb)
-                inter = int(np.count_nonzero(sb[pos[ok]] == sa[ok]))
-                jac[i] = inter / (len(sa) + len(sb) - inter)
-            jr = np.floor(jac * 1e6 + 0.5) / 1e6
-            keep = jr >= thr
-            yield pd.DataFrame(
-                {"doc_a": aa[keep], "doc_b": bb[keep], "jaccard": jr[keep]}
-            )
-
-    return pairs.repartition(n_part).mapInPandas(
-        run, "doc_a bigint, doc_b bigint, jaccard double"
-    )
-
-
 def dedup_ngram_jaccard(
     documents: DataFrame,
-    verify: str = "grid",
     df_cap_frac: float | None = None,
     doc_sets: DataFrame | None = None,
 ) -> DataFrame:
@@ -402,18 +357,17 @@ def dedup_ngram_jaccard(
     PPJoin prefix + positional + size filtering (_prefix_shingles /
     _candidate_pairs) — docs only pair through their rarest shingles and
     provably-infeasible pairs are dropped before any set is touched —
-    then verification scores FULL shingle sets with a numpy merge over
-    shuffle equi-joined arrays. Identical output to the naive
-    shared-shingle blocking (measured sf0.1: 256 pairs both ways; ~450 s
-    naive vs ~20 s here), exact by the PPJoin filter theorems.
+    then verification scores FULL shingle sets. Identical output to the
+    naive shared-shingle blocking (measured sf0.1: 256 pairs both ways;
+    ~450 s naive vs ~20 s here), exact by the PPJoin filter theorems.
 
-    verify="grid" (default) and verify="join" have no driver-side state
-    at any corpus size — grid replicates doc sets A+B× instead of
-    per-pair (the winner at this operator's millions-of-candidates
-    volume; measured sf0.1: ~130 s join-form verify → ~15 s);
-    verify="broadcast_index" is the opt-in bounded-corpus fast path.
-    Every stage derives from ONE _doc_sets exchange (ReusedExchange), so
-    the corpus is md5-hashed exactly once.
+    Verification is the grid form (_verify_jaccard_grid): no driver-side
+    state at any corpus size, and doc sets replicate A+B× instead of
+    per pair — the winner at this operator's hundreds-of-thousands to
+    millions of candidates (measured sf0.1, 532,857 candidates,
+    local[4], 8 alternating rounds: median 10.4 s grid vs 13.4 s
+    equi-join; PERF_NOTES "One exact-Jaccard scorer"). Every stage derives from ONE _doc_sets
+    exchange (ReusedExchange), so the corpus is md5-hashed exactly once.
 
     ``df_cap_frac`` (e.g. 0.02) enables stop-shingle removal in candidate
     generation — the repetitive-corpus escape hatch for the exact
@@ -423,31 +377,22 @@ def dedup_ngram_jaccard(
     ``doc_sets``: a precomputed _doc_sets relation — pass
     `spark.table(...)` over a table persisted bucketed by doc_id
     (sources/bucketing.py:write_doc_sets_bucketed) and every rerun skips
-    the corpus hash AND the verify probes read the doc-set side with
-    ZERO Exchange (the nightly-rerun shape at 100 TB; plan-pinned in
-    tests/test_plans.py)."""
-    import math
-
+    the corpus hash: no shingling, no md5 pass and no doc_id exchange to
+    build the sets (the nightly-rerun shape at 100 TB; plan-pinned in
+    tests/test_plans.py). The grid verify still shuffles each doc set
+    onto its A+B cells, so here bucketing does not make the verify
+    exchange-free on the doc-set side; that holds for the equi-join
+    verify of dedup_minhash_lsh and dedup_minhash_incremental."""
     ds = _doc_sets(documents) if doc_sets is None else doc_sets
-    corpus_for_count = documents if doc_sets is None else doc_sets
-    # n_docs (a zero-column metadata count, but still a Spark job) is
-    # only computed on the paths that use it: the df cap and the
-    # grid-verify sizing. verify="join"/"broadcast_index" without a cap
-    # never pays it.
-    n_docs: int | None = None
+    # one zero-column metadata count (still a Spark job): it sizes the
+    # verify grid and, when set, the df cap
+    n_docs = (documents if doc_sets is None else doc_sets).count()
     df_cap = None
     if df_cap_frac is not None:
-        n_docs = corpus_for_count.count()
         df_cap = max(2, math.ceil(df_cap_frac * n_docs))
     pre = _prefix_shingles(ds, P.JACCARD_THRESHOLD, df_cap=df_cap)
     pairs = _candidate_pairs(pre, P.JACCARD_THRESHOLD)
-    if verify == "broadcast_index":
-        return _verify_jaccard_broadcast(pairs, ds)
-    if verify == "join":
-        return _verify_jaccard(pairs, ds)
-    if n_docs is None:
-        n_docs = corpus_for_count.count()
-    return _verify_jaccard_grid(pairs, ds, n_docs=n_docs)
+    return _verify_jaccard_grid(pairs, ds, n_docs)
 
 
 def _minhash_signatures(doc_sets: DataFrame) -> DataFrame:
@@ -1136,12 +1081,15 @@ def dedup_recall(
     but every consumer still re-ran the post-exchange final aggregation
     (the collect_set + sort_array over shuffled rows) per probe; the
     lazy checkpoint materializes the finished doc-set rows once and
-    every consumer reads them (measured isolated sf0.1: 4.6 → 3.9 s
-    best, rows identical). The PERSIST flavor of the same idea is a
-    measured NEGATIVE (4.6 → 20.3 s): the columnar InMemoryRelation
-    encode of the big array<long> column plus per-partition cache-write
-    locking across the concurrent consumer stages costs far more than
-    it saves — recorded so nobody re-tries it."""
+    every consumer reads them (re-measured sf0.1, local[4], 10
+    alternating pairs of the sampled face: median 7.87 → 5.76 s,
+    executor CPU 11.5 → 9.4 s, same job count, rows identical;
+    PERF_NOTES "Doc-set sharing in dedup_recall and dedup_agreement").
+    The PERSIST flavor of the same idea is a measured NEGATIVE (4.6 →
+    20.3 s): the columnar InMemoryRelation encode of the big array<long>
+    column plus per-partition cache-write locking across the concurrent
+    consumer stages costs far more than it saves — recorded so nobody
+    re-tries it."""
     if sample_mod is not None:
         documents = _recall_sample(documents, sample_mod)
     ds = iter_checkpoint(_doc_sets(documents), eager=False)
@@ -1218,7 +1166,9 @@ def dedup_agreement(
     # ONE lazily checkpointed doc-set relation for both set-based
     # kernels (winnowing fingerprints are positional — no sharing
     # possible): see dedup_recall's r15 note for the measurement and
-    # why persist() is the wrong flavor. Isolated sf0.1: 8.1 → 6.7 s.
+    # why persist() is the wrong flavor. Sampled face, sf0.1, local[4],
+    # 10 alternating pairs: median 9.23 → 7.86 s, executor CPU 18.8 →
+    # 16.8 s.
     ds = iter_checkpoint(_doc_sets(documents), eager=False)
     tagged = (
         dedup_minhash_lsh(documents, doc_sets=ds)

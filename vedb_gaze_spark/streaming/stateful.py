@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from vedb_gaze_spark.functions.core import portable_hash60_sql
+from vedb_gaze_spark.operators.dedup import _exact_jaccard, dedup_minhash_lsh
 from vedb_gaze_spark.plans import params as P
 from vedb_gaze_spark.sources.signals import with_gaze
 
@@ -659,8 +660,6 @@ def _make_minhash_lsh_fn(threshold: float, rows_per_band: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        import math
-
         import numpy as np
 
         band = int(str(key[0]).split("-", 1)[0])
@@ -711,15 +710,7 @@ def _make_minhash_lsh_fn(threshold: float, rows_per_band: int):
                         break
                 if first != band:
                     continue
-                sb = np.asarray(sets[j], dtype=np.int64)
-                sa = cur
-                if len(sa) > len(sb):
-                    sa, sb = sb, sa
-                pos = np.searchsorted(sb, sa)
-                ok = pos < len(sb)
-                inter = int(np.count_nonzero(sb[pos[ok]] == sa[ok]))
-                jac = inter / (len(sa) + len(sb) - inter)
-                jr = math.floor(jac * 1e6 + 0.5) / 1e6
+                jr = _exact_jaccard(cur, np.asarray(sets[j], dtype=np.int64))
                 if jr >= threshold:
                     out.append(
                         (min(doc_id, other), max(doc_id, other), jr)
@@ -761,8 +752,6 @@ def streaming_dedup_minhash_lsh(
     documents table carries no timestamp); cross-batch parity vs the
     batch operator is exact for pairs whose docs arrive within the
     horizon (tests/test_streaming.py)."""
-    from vedb_gaze_spark.operators.dedup import dedup_minhash_lsh
-
     if not documents.isStreaming:
         return dedup_minhash_lsh(documents)
     k = P.SHINGLE_K
