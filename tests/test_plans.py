@@ -247,12 +247,18 @@ def test_corpus_stats_median_is_histogram_not_full_sort(spark, sf_dir):
 def test_no_driver_collect_in_operators():
     """No registered query may materialize DATA on the driver: a
     .collect() inside an operator is a corpus-sized driver OOM at 100 TB.
-    Allowed sites: k-means training, which collects O(k·dim) MODEL STATE
-    per iteration (the MLlib iterative pattern), never rows of the
+    Allowed sites: the trainers' task-partials combine, which collects
+    one model-sized partial per task (the MLlib aggregate-collect
+    pattern), and named model-state collects, never rows of the
     corpus."""
     import pathlib
 
     allowed = (
+        # the one task-partials combine behind every trainer: one
+        # fixed-size model partial per task (k·dim sums, k counts; for
+        # k-means|| also the task's ≤≈l candidate rows), never rows
+        "def _task_partials",
+        # Lloyd's IVF training: the k init vectors (first_k)
         "def ivf_train_centroids",
         # static benchmark n-gram set for streaming decontamination:
         # collects O(eval-suite) n-grams once, never corpus rows
@@ -267,9 +273,7 @@ def test_no_driver_collect_in_operators():
         # round — the argmax of a full aggregation, i.e. model state,
         # exactly the ivf/k-means iterative pattern
         "def bpe_train",
-        # PQ codebook training: collects m*k_sub*d_sub centroid
-        # components per Lloyd's iteration (fixed model size) and the
-        # k_sub init vectors — never corpus rows
+        # PQ codebook training: the k_sub init vectors
         "def pq_train",
         # cluster-maintenance fold: collects the DISTINCT bucket ids
         # touched by a micro-batch — bounded by n_buckets (a config
@@ -308,9 +312,8 @@ def test_no_driver_collect_in_operators():
         # labels-sized centroid model (the _load_cents collect class),
         # once per job, never data rows
         "def _load",
-        # k-means|| init: seed vector, phi scalar, ~l candidate vectors
-        # per round, and candidate weights — ALL model state (the
-        # Lloyd's-trainer collect class, Bahmani et al. Algorithm 2)
+        # k-means|| init: the seed vector, and the first k vectors when
+        # a degenerate corpus leaves fewer than k candidates
         "def kmeanspar_init",
         # stats-manifest reader: collects the overlapping FILE LIST
         # from the manifest (file-skipping metadata — the Delta/Iceberg
@@ -341,10 +344,6 @@ def test_no_driver_collect_in_operators():
         "def _write_epoch_offsets",
         "def write_epoch_order",
         "def append_epoch_order",
-        # PCA training (r11): collects one (n, Σx, Σxxᵀ) moment row per
-        # ARROW BATCH — batch-count-sized model state (the sq8_stats /
-        # Lloyd's-trainer collect class); vectors never leave executors
-        "def pca_train",
         # pldata sink (r11): collects one STATS row per recording to
         # drive the write job — the write_tar_shards collect class;
         # datum payloads never leave the executors
@@ -1559,6 +1558,93 @@ def test_kmeanspar_init_deterministic_and_improves_objective(spark, sf_dir):
     assert hits / len(exact) >= 0.4, hits / len(exact)
 
 
+# Candidate rows one k-means|| task returns in one round, 2·l for l = 32.
+# Measured on the sf0.01 vectors: at most 35 (one task of ten 50-row
+# Arrow batches) and at most 20 (64 tasks). A threshold against the
+# running partial φ would let 93 rows through in the first round of
+# that one task.
+KMEANSPAR_CANDS_PER_TASK = 64
+
+
+def test_kmeanspar_candidate_collect_is_bounded_per_task(
+    spark, sf_dir, monkeypatch
+):
+    """Each k-means|| task thresholds its rows against its FINAL partial
+    φ, so it returns at most ≈l candidates per round whatever its row
+    count and Arrow batching, and the driver's exact predicate picks the
+    same candidates at any width: 64 input partitions give the centroids
+    of 1. Small Arrow batches make the 1-partition task fold many
+    batches, which is where a running φ would let early rows through."""
+    from vedb_gaze_spark.operators import similarity
+    from vedb_gaze_spark.sources.tables import load_table
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    payloads = []
+    combine = similarity._task_partials
+
+    def spy(df, kernel):
+        total, extras = combine(df, kernel)
+        payloads.append([len(e[0]) for e in extras if e is not None])
+        return total, extras
+
+    monkeypatch.setattr(similarity, "_task_partials", spy)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "50")
+        one = similarity.kmeanspar_init(emb.coalesce(1), k=16)
+        one_rounds = [p for p in payloads if p]  # the weighting pass has none
+        payloads.clear()
+        wide = similarity.kmeanspar_init(emb.repartition(64, "vec_id"), k=16)
+    finally:
+        spark.conf.set(key, saved)
+    wide_rounds = [p for p in payloads if p]
+    assert wide == one
+    assert [len(p) for p in one_rounds] == [1] * 4
+    assert [len(p) for p in wide_rounds] == [64] * 4
+    most = max(max(p) for p in one_rounds + wide_rounds)
+    assert most <= KMEANSPAR_CANDS_PER_TASK, (one_rounds, wide_rounds)
+
+
+def test_task_partials_combine_ignores_task_order(spark):
+    """similarity._task_partials sums the per-task partials in content
+    order, not collect order: one frame built as a union of the same
+    three one-partition chunks in two orders gives bit-identical PQ
+    codebooks and PCA models, although the chunks are chosen so that
+    the order of float addition matters (1e16 + 1 - 1e16)."""
+    import numpy as np
+
+    from vedb_gaze_spark.operators import similarity
+    from vedb_gaze_spark.plans import params as P
+
+    assert (1e16 + 1.0) - 1e16 != (1e16 - 1e16) + 1.0
+    d = P.EMB_DIM
+    ramp = np.arange(d, dtype=np.float64) / d
+
+    def chunk(rows):  # one partition (a local relation would be merged)
+        rdd = spark.sparkContext.parallelize(
+            [(i, [float(x) for x in v]) for i, v in rows], 1
+        )
+        return spark.createDataFrame(rdd, "vec_id long, embedding array<double>")
+
+    chunks = [
+        chunk([(0, np.full(d, 1e16)), (3, ramp)]),
+        chunk([(1, 1.0 + ramp)]),
+        chunk([(2, np.full(d, -1e16)), (4, 1.0 - ramp)]),
+    ]
+    a = chunks[0].union(chunks[1]).union(chunks[2])
+    b = chunks[2].union(chunks[0]).union(chunks[1])
+    assert a.rdd.getNumPartitions() == b.rdd.getNumPartitions() == 3
+
+    assert similarity.pq_train(a, m=2, k_sub=1) == similarity.pq_train(
+        b, m=2, k_sub=1
+    )
+    for x, y in zip(
+        similarity.pca_train(a, d_out=4), similarity.pca_train(b, d_out=4)
+    ):
+        assert np.array_equal(x, y)
+
+
 def test_epoch_shuffle_plan_has_no_single_partition_exchange(spark, sf_dir):
     """The two-level rank's reason to exist: the naive global
     row_number would plan an Exchange SinglePartition (every row
@@ -1938,8 +2024,8 @@ def test_mine_hard_negatives_matches_numpy_and_filters_labels(spark, sf_dir):
 
 
 def test_embed_pca_recovers_planted_axes_and_whitens(spark):
-    """PCA projection (trained-model discipline: batch-count-sized
-    moment collect + driver d×d eigensolve): on data planted along two
+    """PCA projection (trained-model discipline: one moment partial per
+    task + driver d×d eigensolve): on data planted along two
     known orthogonal directions with distinct variances, the top-2
     components recover those directions (up to the deterministic sign
     gauge), projected variances come out in planted order, whitening

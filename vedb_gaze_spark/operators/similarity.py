@@ -790,6 +790,43 @@ def _dots_expr_for(cents: list[list[float]], vec_col: str) -> str:
     )
 
 
+def _task_partials(df: DataFrame, kernel):
+    """The one combine of per-task model partials behind every trainer
+    (Lloyd's in ivf_train_centroids and pq_train, kmeanspar_init,
+    pca_train) — MLlib's aggregate-collect step. One mapInPandas pass:
+    each task folds its whole partition with ``kernel(batches) ->
+    (partial, extra)`` and yields ONE row — ``partial`` a tuple of
+    fixed-shape numpy arrays (model-sized, e.g. k·dim sums and k
+    counts), ``extra`` a small picklable side payload or None. The
+    driver collects one row per task (never corpus rows) and returns
+    ``(element-wise sum of the partials, [extra of each task])``.
+
+    Determinism rule: partials are summed in content-sorted order
+    (numeric order of each partial's flattened arrays), never in collect
+    order; the extras come in that order too, and a caller that needs
+    them ordered sorts them itself. So the sum depends only on the
+    multiset of task partials: the same rows in the
+    same tasks give bit-identical sums however the tasks are scheduled,
+    fetched or unioned. It is not independent of how rows land in
+    tasks: another partitioning gives other partials, whose float sum
+    may differ in the last bits."""
+    import pickle
+
+    import numpy as np
+
+    def run(batches):
+        import pandas as pd
+
+        yield pd.DataFrame({"p": [pickle.dumps(kernel(batches))]})
+
+    tasks = [pickle.loads(r["p"]) for r in df.mapInPandas(run, "p binary").collect()]
+    tasks.sort(
+        key=lambda t: tuple(np.concatenate([np.ravel(a) for a in t[0]]).tolist())
+    )
+    total = tuple(map(sum, zip(*(p for p, _ in tasks))))
+    return total, [extra for _, extra in tasks]
+
+
 def ivf_train_centroids(
     embeddings: DataFrame, k: int = 16, iters: int = 5, init: str = "first_k"
 ) -> list[list[float]]:
@@ -797,24 +834,19 @@ def ivf_train_centroids(
     production path params.IVF_CENTROIDS stands in for (its comment:
     "a production index would k-means these").
 
-    Each iteration is ONE Spark job (r15 shape — the pq_train
-    fixed-size-partials pattern, guide §2.3/§4.2, VERDICT r14 #3):
-    each task assigns its vectors to their argmax-dot cell with one
-    numpy GEMM and emits ONE (k × dim) partial-sum/count table
-    regardless of row count; the shuffle is model-sized and the driver
-    holds only MODEL STATE (k·dim floats) between iterations — the
-    legitimate iterative-algorithm pattern (MLlib's KMeans does the
-    same aggregate-collect per step), not a data collect. The previous
-    expression form (literal-matrix HOF dots + posexplode to
-    corpus×dim rows + groupBy avg) measured 3.4 s vs 1.7 s for 3
-    iterations at sf0.1. Like the old form, the trained values are
-    float-summation-order model state (every consuming face is
-    rows-only for exactly that reason); per-run determinism is
-    preserved — hash-free numpy on a deterministic partitioning.
-    Deterministic init, two flavors: 'first_k' = the first k vectors by
-    vec_id (the cheap default); 'kmeanspar' = the k-means|| oversampling
-    pass (kmeanspar_init, Bahmani et al. 2012) — a few extra corpus
-    scans for a near-k-means++-quality starting point."""
+    Each iteration is one _task_partials pass — one Spark job, measured
+    at sf0.01 and sf0.1: each task assigns its vectors to their
+    argmax-dot cell with one numpy GEMM and returns ONE (k × dim)
+    partial sum and k counts regardless of row count; the driver sums
+    them and holds only MODEL STATE (k·dim floats) between iterations —
+    MLlib's KMeans aggregate-collect per step, not a data collect. The
+    trained values are float-summation-order model state (every
+    consuming face is rows-only for exactly that reason); see
+    _task_partials for what they are deterministic under. Deterministic
+    init, two flavors: 'first_k' = the first k vectors by vec_id (the
+    cheap default); 'kmeanspar' = the k-means|| oversampling pass
+    (kmeanspar_init, Bahmani et al. 2012) — a few extra corpus scans for
+    a near-k-means++-quality starting point."""
     import numpy as np
 
     # cache the parsed vector relation: every Lloyd's iteration scans
@@ -824,16 +856,15 @@ def ivf_train_centroids(
     if init == "kmeanspar":
         cents = kmeanspar_init(embeddings, k=k)
     else:
-        rows0 = (
-            v.where(F.col("vec_id") < k).orderBy("vec_id").select("v").collect()
+        # k rows: sorted on the driver, not by a distributed sort
+        rows0 = sorted(
+            v.where(F.col("vec_id") < k).collect(), key=lambda r: r["vec_id"]
         )
         cents = [list(map(float, r["v"])) for r in rows0]
     for _ in range(iters):
         C = np.array(cents, dtype=np.float64)
 
         def partials(batches, _C=C):
-            import pandas as pd
-
             kk, dd = _C.shape
             s = np.zeros((kk, dd))
             n = np.zeros(kk, dtype=np.int64)
@@ -848,28 +879,12 @@ def ivf_train_centroids(
                 cell = np.round(X @ _C.T, 6).argmax(1)
                 np.add.at(s, cell, X)
                 n += np.bincount(cell, minlength=kk)
-            cellg, dimg = np.meshgrid(
-                np.arange(kk), np.arange(dd), indexing="ij"
-            )
-            yield pd.DataFrame(
-                {
-                    "cell": cellg.ravel().astype("int32"),
-                    "dim": dimg.ravel().astype("int32"),
-                    "s": s.ravel(),
-                    "n": np.repeat(n, dd),
-                }
-            )
+            return (s, n), None
 
-        rows = (
-            v.mapInPandas(partials, "cell int, dim int, s double, n bigint")
-            .groupBy("cell", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .where(F.col("n") > 0)
-            .collect()
-        )
-        M = np.zeros((k, len(cents[0])))
-        for r in rows:
-            M[r["cell"], r["dim"]] = float(r["s"]) / float(r["n"])
+        (s, n), _ = _task_partials(v, partials)
+        # an empty cell's centroid is the zero vector
+        M = np.zeros_like(s)
+        M[n > 0] = s[n > 0] / n[n > 0, None]
         nrm = np.sqrt((M * M).sum(1))
         nrm[nrm == 0] = 1.0
         M = M / nrm[:, None]
@@ -890,8 +905,9 @@ def ann_ivf_trained(
     """ann_ivf with TRAINED coarse centroids (ivf_train_centroids)
     instead of the fixed literals — identical plan shape (assign → probe
     → exact rerank), different cell geometry. Rows-only oracle: the
-    trained centroids depend on float summation order inside avg(), so
-    cell boundaries are not bit-reproducible across engines, but the
+    trained centroids depend on the float summation order of Lloyd's
+    partial sums (_task_partials), so cell boundaries are not
+    bit-reproducible across engines, but the
     output is always n_queries·k rows with the exact rerank semantics.
     init='kmeanspar' swaps the naive first-k starting point for the
     k-means|| oversampling init (kmeanspar_init)."""
@@ -1143,10 +1159,10 @@ def semdedup_trained(
     scan — is unchanged; only cell geometry moves).
 
     Rows-only oracle, same reason as ann_ivf_trained: trained centroids
-    depend on float summation order inside avg(), so cell boundaries are
-    not bit-reproducible across engines. Decision-table equality with
-    the fixed-literal variant when handed those literals as the trained
-    input is pytest-pinned (tests/test_similarity_ops.py), which is what
+    depend on the float summation order of Lloyd's partial sums, so cell
+    boundaries are not bit-reproducible across engines. Decision-table
+    equality with the fixed-literal variant when handed those literals as
+    the trained input is pytest-pinned (tests/test_similarity_ops.py), which is what
     makes the rows-only record trustworthy: the only untested piece is
     the k-means geometry, and that has its own planted test."""
     cents = ivf_train_centroids(embeddings, k=n_cells, iters=iters)
@@ -1227,12 +1243,12 @@ def pq_train(
     iters: int = 3,
     coarse_centroids: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
-    """Distributed Lloyd's over every subspace AT ONCE: one Spark job
-    per iteration assigns all (vector, subspace) pairs to their argmin
-    cell and sums components per (subspace, cell, dim) as FIXED-SIZE
-    numpy partial tables per task — the shuffle is m·k_sub·d_sub rows,
-    never the corpus. Driver holds only the codebooks between
-    iterations (the ivf_train_centroids model-state pattern).
+    """Distributed Lloyd's over every subspace AT ONCE: one
+    _task_partials pass (one Spark job) per iteration assigns all
+    (vector, subspace) pairs to their argmin cell, and each task
+    returns ONE fixed-size (m, k_sub, d_sub) partial sum and (m, k_sub)
+    counts — the corpus never moves. Driver holds only the codebooks
+    between iterations (the ivf_train_centroids model-state pattern).
     Deterministic init: subvectors of the first k_sub vectors.
 
     ``coarse_centroids`` (IVFADC): when given, training runs on the
@@ -1241,13 +1257,15 @@ def pq_train(
     §IV)."""
     import numpy as np
 
-    # cached: each Lloyd's iteration (plus the dims probe and init
-    # collect) scans the parsed vector relation
+    # cached: each Lloyd's iteration (plus the init collect) scans the
+    # parsed vector relation
     v = _vecs(embeddings).persist()
-    dims = len(v.select("v").first()["v"])
-    d_sub = dims // m
-    init = v.where(F.col("vec_id") < k_sub).orderBy("vec_id").select("v").collect()
+    # k_sub rows: sorted on the driver, not by a distributed sort
+    init = sorted(
+        v.where(F.col("vec_id") < k_sub).collect(), key=lambda r: r["vec_id"]
+    )
     init_V = np.array([list(r["v"]) for r in init], dtype=np.float64)
+    d_sub = init_V.shape[1] // m
     if coarse_centroids is not None:
         Cc = np.array(coarse_centroids, dtype=np.float64)
         init_V = init_V - Cc[(init_V @ Cc.T).argmax(1)]
@@ -1259,17 +1277,11 @@ def pq_train(
         for j in range(m)
     ]
     for _ in range(iters):
-        bk = [list(map(list, book)) for book in books]
+        B = np.array(books, dtype=np.float64)  # (m, k_sub, d_sub)
 
-        def partials(batches, _bk=bk, _cc=coarse_centroids):
-            import numpy as np
-            import pandas as pd
-
-            B = np.array(_bk, dtype=np.float64)  # (m, k_sub, d_sub)
-            mm, kk, dd = B.shape
-            Cc = (
-                np.array(_cc, dtype=np.float64) if _cc is not None else None
-            )
+        def partials(batches, _B=B, _cc=coarse_centroids):
+            mm, kk, dd = _B.shape
+            Cc = np.array(_cc, dtype=np.float64) if _cc is not None else None
             s = np.zeros((mm, kk, dd), dtype=np.float64)
             n = np.zeros((mm, kk), dtype=np.int64)
             for pdf in batches:
@@ -1280,43 +1292,19 @@ def pq_train(
                     V = V - Cc[(V @ Cc.T).argmax(1)]
                 Vs = V.reshape(len(V), mm, dd)
                 for j in range(mm):
-                    D = ((Vs[:, j, None, :] - B[j][None, :, :]) ** 2).sum(-1)
+                    D = ((Vs[:, j, None, :] - _B[j][None, :, :]) ** 2).sum(-1)
                     c = D.argmin(1)
                     np.add.at(s[j], c, Vs[:, j])
                     n[j] += np.bincount(c, minlength=kk)
-            sub, code, dim = np.meshgrid(
-                np.arange(mm), np.arange(kk), np.arange(dd), indexing="ij"
-            )
-            yield pd.DataFrame(
-                {
-                    "sub": sub.ravel().astype(np.int32),
-                    "code": code.ravel().astype(np.int32),
-                    "dim": dim.ravel().astype(np.int32),
-                    "s": s.ravel(),
-                    "n": np.repeat(n.ravel(), dd),
-                }
-            )
+            return (s, n), None
 
-        # each task emits ONE fixed-size partial-sum table (m·k_sub·d_sub
-        # rows) regardless of how many vectors it assigned — the shuffle
-        # is model-sized, the corpus never moves (map-side combine done
-        # by hand in numpy; the old form exploded corpus×dims rows)
-        rows = (
-            v.mapInPandas(
-                partials,
-                "sub int, code int, dim int, s double, n bigint",
-            )
-            .groupBy("sub", "code", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .where(F.col("n") > 0)
-            .collect()
-        )
-        nxt = [[list(c) for c in book] for book in books]
-        for r in rows:
-            nxt[r["sub"]][r["code"]][r["dim"]] = round(
-                float(r["s"]) / float(r["n"]), 6
-            )
-        books = nxt
+        (s, n), _ = _task_partials(v, partials)
+        # an empty cell keeps its codeword (already rounded: round is
+        # idempotent on a 6 dp value)
+        nxt = np.where(n[..., None] > 0, s / np.maximum(n, 1)[..., None], B)
+        books = [
+            [[round(float(x), 6) for x in row] for row in book] for book in nxt
+        ]
     v.unpersist()
     return books
 
@@ -1951,30 +1939,6 @@ def _sq8_search(
 # --- k-means|| initialization (Bahmani et al. 2012) -----------------------
 
 
-def _min_d2_kernel(C):
-    """mapInPandas kernel: per-row min squared Euclidean distance to the
-    candidate set C (numpy (m, d), shipped in the task closure — model
-    sized). One BLAS GEMM per Arrow batch; vectors pass through so the
-    selection filter needs no join back."""
-    import numpy as np
-
-    cn = (C * C).sum(1)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + cn[None, :]
-            pdf = pdf.copy()
-            pdf["d2"] = np.maximum(d2.min(1), 0.0)
-            yield pdf
-
-    return gen
-
-
 def kmeanspar_init(
     embeddings: DataFrame,
     k: int = 16,
@@ -1997,21 +1961,16 @@ def kmeanspar_init(
     trained indexes are reproducible (the repo-wide hash-derived-
     randomness rule).
 
-    Scale shape per round (r15, guide §2.6/§5 — VERDICT r14 #3's
-    jobs-per-round reduction): ONE corpus pass. The old shape ran two
-    jobs per round — a scalar collect for φ, then a filtered collect of
-    the candidates, each re-running the d² GEMM — but the coin flip
-    u < l·d²/φ can be DECIDED LATE: the kernel streams out every row
-    with u < l·d²/φ_partial (φ_partial = the task's own running d² sum,
-    always ≤ φ, so this is a SUPERSET with no false negatives — expected
-    size ≈ l·(corpus φ / partition φ) ≈ l · n_partitions, model-sized)
-    plus one partial-φ row per task; the driver sums the exact φ and
-    applies the exact predicate to the superset. Each partition's
-    partial φ and coin flips are bit-identical to a Spark partial sum
-    and portable_hash60; the driver merges the partials in partition
-    order, so the result is deterministic for a fixed partitioning:
-    2 jobs/round → 1, isolated init 3.2 s → 1.5 s. The final weighting
-    pass is one more corpus scan + a candidate-count groupBy; greedy
+    Scale shape per round: ONE _task_partials pass. The coin flip
+    u < l·d²/φ is DECIDED LATE: each task returns its partial φ (the
+    sum of its rows' d²) and, as its side payload, the rows with
+    u < l·d²/φ_task, thresholded once against the task's final φ_task.
+    φ_task ≤ φ, so this is a superset with no false negatives, and its
+    expected size is Σ min(1, l·d²/φ_task) ≤ l rows per task whatever
+    the partition count. The driver sums the exact φ and applies the
+    exact predicate to the superset; picked candidates join C in
+    vec_id order. The final weighting pass is one more _task_partials
+    pass (each task counts its rows' nearest candidate); greedy
     weighted k-means++ and weighted Lloyd's then run on the ≈l·rounds
     candidates in numpy — never on corpus rows."""
     import numpy as np
@@ -2021,100 +1980,64 @@ def kmeanspar_init(
     v = _vecs(embeddings).persist()
     first = v.orderBy("vec_id").limit(1).collect()[0]["v"]
     C = np.array([list(map(float, first))], dtype=np.float64)
-    schema = "kind int, vec_id bigint, v array<double>, d2 double, u double"
     for r in range(rounds):
-        Ck = C
 
-        def fused(batches, _C=Ck, _r=r, _salt=salt, _l=l):
-            import pandas as pd
-
+        def fused(batches, _C=C, _r=r):
             cn = (_C * _C).sum(1)
-            phi_part = 0.0
+            phi = 0.0
+            # rows under the running threshold: φ only grows, so every
+            # row that passes the task's final threshold is held here
+            held = [(np.zeros(0, np.int64), np.zeros((0, _C.shape[1])),
+                     np.zeros(0), np.zeros(0))]
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
                 d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ _C.T) + cn[None, :]
                 d2 = np.maximum(d2.min(1), 0.0)
-                # left fold in row order, continued across batches: the
-                # same bits as Spark's per-partition partial sum (the
-                # merge across partitions happens driver-side)
-                for _x in d2:
-                    phi_part += float(_x)
+                for _x in d2:  # left fold in row order
+                    phi += float(_x)
                 ids = pdf["vec_id"].to_numpy()
                 # u = portable_hash60(f"{salt}:{r}:{id}") / 2^60
                 us = np.array(
-                    [portable_hash60_py(f"{_salt}:{_r}:{i}") for i in ids]
+                    [portable_hash60_py(f"{salt}:{_r}:{i}") for i in ids]
                 ) / float(1 << 60)
-                keep = (
-                    us < _l * d2 / phi_part
-                    if phi_part > 0
-                    else np.ones(len(ids), dtype=bool)
-                )
-                if keep.any():
-                    yield pd.DataFrame(
-                        {
-                            "kind": np.full(int(keep.sum()), 1, dtype="int32"),
-                            "vec_id": ids[keep],
-                            "v": list(pdf["v"].to_numpy()[keep]),
-                            "d2": d2[keep],
-                            "u": us[keep],
-                        }
-                    )
-            yield pd.DataFrame(
-                {
-                    "kind": [0],
-                    "vec_id": [-1],
-                    "v": [[]],
-                    "d2": [phi_part],
-                    "u": [0.0],
-                }
-            )
+                # while φ is 0 every d² so far is 0: no such row is picked
+                keep = us < l * d2 / phi if phi > 0 else np.zeros(len(ids), bool)
+                held.append((ids[keep], X[keep], d2[keep], us[keep]))
+            ids, X, d2, us = (np.concatenate(c) for c in zip(*held))
+            keep = us < l * d2 / phi if phi > 0 else np.zeros(len(ids), bool)
+            return (np.float64(phi),), (ids[keep], X[keep], d2[keep], us[keep])
 
-        rows = v.mapInPandas(fused, schema).collect()
-        phi = sum(row["d2"] for row in rows if row["kind"] == 0)
+        (phi,), cands = _task_partials(v, fused)
         if not phi or phi <= 0:
             break
-        # exact predicate with the exact φ, in arrival (partition) order
-        # — the same order the old filtered collect returned
-        picked = [
-            row
-            for row in rows
-            if row["kind"] == 1 and row["u"] < float(l) * row["d2"] / float(phi)
-        ]
-        if picked:
-            C = np.vstack(
-                [C] + [np.array(list(map(float, p["v"]))) for p in picked]
-            )
+        ids, X, d2, us = (np.concatenate(c) for c in zip(*cands))
+        # the exact predicate with the exact φ; picks join C in vec_id order
+        picked = np.flatnonzero(us < float(l) * d2 / float(phi))
+        picked = picked[np.argsort(ids[picked], kind="stable")]
+        C = np.vstack([C, X[picked]])
     if len(C) < k:  # degenerate corpus: top up with the first vectors
         extra = v.orderBy("vec_id").limit(k).collect()
         C = np.vstack([C] + [np.array(list(map(float, e["v"]))) for e in extra])[
             : max(k, len(C))
         ]
-    # weight candidates by |points nearest to them| — one corpus pass
-    def nearest_gen(batches):
-        import pandas as pd
 
-        cn = (C * C).sum(1)
+    # weight candidates by |points nearest to them| — one corpus pass
+    def nearest(batches, _C=C):
+        cn = (_C * _C).sum(1)
+        w = np.zeros(len(_C), dtype=np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + cn[None, :]
-            yield pd.DataFrame({"cand": d2.argmin(1).astype("int64")})
+            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ _C.T) + cn[None, :]
+            w += np.bincount(d2.argmin(1), minlength=len(_C))
+        return (w,), None
 
-    import pandas as pd  # noqa: F401  (kernel import scope)
-
-    wrows = (
-        v.mapInPandas(nearest_gen, "cand bigint")
-        .groupBy("cand")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .collect()
-    )
+    (w,), _ = _task_partials(v, nearest)
     v.unpersist()
-    w = np.zeros(len(C))
-    for row in wrows:
-        w[row["cand"]] = row["w"]
+    w = w.astype(np.float64)
 
     # greedy weighted k-means++ on the candidates (deterministic: argmax
     # of w·d² with lowest-index tie-break), then weighted Lloyd's
@@ -2448,56 +2371,34 @@ def pca_train(
     whitening option is the preprocessing semdedup-style pipelines run
     before cosine work when dimensions are correlated).
 
-    Distributed shape (the trained-model discipline): ONE mapInPandas
-    pass emits per-batch moment rows (n, Σx, flattened Σxxᵀ) — numpy
-    GEMM per Arrow batch — and the driver combines the BATCH-COUNT-sized
-    rows in a content-sorted order (collect order follows partition
-    layout, and float sums are order-sensitive; sorting pins the
-    summation order so batch and stream training see the same model
-    for the same rows regardless of layout), solves the d×d
+    Distributed shape (the trained-model discipline): ONE _task_partials
+    pass — each task sums its Arrow batches' moments (n, Σx, Σxxᵀ; numpy
+    GEMM per batch) into one fixed-size partial, and the driver sums the
+    task partials in content-sorted order (the rule and what it does
+    and does not pin are in _task_partials' docstring), solves the d×d
     symmetric eigenproblem (d=64: microseconds), and fixes eigenvector
     sign deterministically (largest-|coordinate| positive). Nothing
     corpus-sized ever reaches the driver."""
     import numpy as np
 
     d_in = P.EMB_DIM
-    moment_schema = "n long, s array<double>, ss array<double>"
 
     def moments(batches):
-        import numpy as np
-        import pandas as pd
-
+        n, s, ss = 0, np.zeros(d_in), np.zeros((d_in, d_in))
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
             )
-            yield pd.DataFrame(
-                {
-                    "n": [len(X)],
-                    "s": [X.sum(axis=0).tolist()],
-                    "ss": [(X.T @ X).ravel().tolist()],
-                }
-            )
+            n, s, ss = n + len(X), s + X.sum(axis=0), ss + X.T @ X
+        return (np.int64(n), s, ss), None
 
-    rows = (
-        _vecs(embeddings)
-        .where(F.col("v").isNotNull())
-        .select("v")
-        .mapInPandas(moments, moment_schema)
-        .collect()
+    (n, s, ss), _ = _task_partials(
+        _vecs(embeddings).where(F.col("v").isNotNull()).select("v"), moments
     )
-    # deterministic combine order (collect order is partition-layout-
-    # dependent; float summation is not associative in practice)
-    rows = sorted(rows, key=lambda r: (r.n, tuple(r.s)))
-    n = sum(r.n for r in rows)
     if n < 2:
         raise ValueError("pca_train needs at least 2 vectors")
-    s = np.sum([np.asarray(r.s) for r in rows], axis=0)
-    ss = np.sum(
-        [np.asarray(r.ss).reshape(d_in, d_in) for r in rows], axis=0
-    )
     mean = s / n
     cov = ss / n - np.outer(mean, mean)
     evals, evecs = np.linalg.eigh((cov + cov.T) / 2.0)

@@ -1185,9 +1185,9 @@ def _bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_pq")
 def _ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # rows-only: trained PQ codebooks inherit avg() float summation
-    # order (same rationale as ann_ivf_trained); recall + exact-rerank
-    # equality are pinned in tests/test_plans.py
+    # rows-only: trained PQ codebooks inherit the float summation order
+    # of Lloyd's partial sums (same rationale as ann_ivf_trained);
+    # recall + exact-rerank equality are pinned in tests/test_plans.py
     return similarity.ann_pq(load_table(spark, "embeddings", sf_dir))
 
 
