@@ -6,10 +6,10 @@ The apply_per_key family: its Python-worker cost is paid per task, so
 its kernel stage (the MapInPandas) may run at most
 spark.sql.shuffle.partitions tasks.
 
-The iterative graph faces and the trained faces are job-count-bound:
-each call must launch the same jobs as the last (no relation cached by
-one call feeds the next) within a pinned budget, so a budget change is
-an explicit diff."""
+The iterative graph faces, the trained faces and the stored IVFADC
+index's serve and append are job-count-bound: each call must launch the
+same jobs as the last (no relation cached by one call feeds the next)
+within a pinned budget, so a budget change is an explicit diff."""
 
 import pytest
 
@@ -64,3 +64,45 @@ TRAINER_JOB_BUDGET = {
 def test_trained_faces_repeat_the_same_jobs(spark, sf_dir, job_group_run, key):
     first, second = _two_calls(spark, sf_dir, job_group_run, key)
     assert first == second <= TRAINER_JOB_BUDGET[key], (first, second)
+
+
+# Jobs per call of the stored IVFADC index's serve (IVFPQServing.process
+# over a 16-query batch, after the first call has loaded the model) and
+# append (append_ivfpq_index of 50 new vectors), at the same settings
+# and measured with 4 and 8 local cores: serve 6, append 8. Before the
+# serve pruned through the kernel's own probe and every stored-index
+# read declared its schema, they ran 10 and 11.
+IVFPQ_SERVE_JOB_BUDGET = 6
+IVFPQ_APPEND_JOB_BUDGET = 8
+
+
+def test_ivfpq_serve_and_append_repeat_the_same_jobs(
+    spark, sf_dir, job_group_run, tmp_path
+):
+    import pyspark.sql.functions as F
+
+    from vedb_gaze_spark.sources.tables import load_table
+    from vedb_gaze_spark.streaming.serving import (
+        IVFPQServing,
+        append_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    vec_id = F.col("vec_id")
+    idx = str(tmp_path / "index")
+    books = write_ivfpq_index(emb.where(vec_id < 250), idx, iters=1)
+    job = IVFPQServing(idx, str(tmp_path / "out"), books)
+    batch = emb.where(vec_id.isin(list(range(0, 480, 30))))
+    job.process(batch, 0)
+    serves = [job_group_run(lambda i=i: job.process(batch, i))[0] for i in (1, 2)]
+    appends = [
+        job_group_run(
+            lambda lo=lo: append_ivfpq_index(
+                emb.where((vec_id >= lo) & (vec_id < lo + 50)), idx
+            )
+        )[0]
+        for lo in (250, 300)
+    ]
+    assert serves[0] == serves[1] <= IVFPQ_SERVE_JOB_BUDGET, serves
+    assert appends[0] == appends[1] <= IVFPQ_APPEND_JOB_BUDGET, appends

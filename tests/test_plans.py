@@ -283,38 +283,32 @@ def test_no_driver_collect_in_operators():
         # (model state — the streaming analog of shipping a KenLM
         # binary per worker) and O(languages) tertile boundary keys
         "def ccnet_model",
-        # IVFADC serving probe: collects the DISTINCT probed cell ids
-        # for a query batch (≤ n_cells ints — partition-pruning
-        # metadata, the maintenance.py bucket-id pattern), never rows
+        # IVF serving's description of what a serve reads: collects the
+        # DISTINCT probed cell ids of a query batch (≤ n_cells ints);
+        # not on the serve path, which prunes through the kernel's own
+        # broadcast probe (dynamic partition pruning), never rows
         "def probed_codes",
-        # IVFADC serving quantizer load: collects the index's ONE
-        # stored centroids row (n_cells·dim floats — the model the
-        # codes were encoded against), once per job, never rows
-        "def _load_cents",
+        # stored-index model loads: the index's ONE coarse-quantizer,
+        # codebook or SQ8 stats row (model state the codes were encoded
+        # against), read by the servers once per job and by the appends
+        # before encoding a new batch, never rows
+        "def _read_cents",
+        "def _read_books",
+        "def _read_stats",
         # SQ8 scalar-quantizer training: collects per-dim (min, max) —
         # EMB_DIM rows of model state, the same class as the Lloyd's
         # trainers' centroid collects
         "def sq8_stats",
-        # stored-index growth: loads the index's OWN quantizer +
-        # codebooks (one row each of model state — the _load_cents
-        # pattern) before encoding the new batch with them
-        "def append_ivfpq_index",
-        # IVFADC serving codebook load: the codebooks row (model
-        # state), once per job, never data rows
-        "def _load_books",
         # Z-order rectangle reader: the persisted grid-geometry row
         # (bits/min/max — partition METADATA, the probed-cells pattern)
         "def read_zorder_pruned",
-        # SQ8 serving quantizer load: the index's ONE stored stats row
-        # (per-dim min/max — model state), once per job, never rows
-        "def _load_stats",
         # label-separation serving centroid load (r10): the stored
-        # labels-sized centroid model (the _load_cents collect class),
+        # labels-sized centroid model (the _read_cents collect class),
         # once per job, never data rows
         "def _load",
         # k-means|| init: the seed vector, and the first k vectors when
         # a degenerate corpus leaves fewer than k candidates
-        "def kmeanspar_init",
+        "def _kmeanspar_init",
         # stats-manifest reader: collects the overlapping FILE LIST
         # from the manifest (file-skipping metadata — the Delta/Iceberg
         # log-read decision), never data rows
@@ -334,9 +328,6 @@ def test_no_driver_collect_in_operators():
         # frozen NB language-ID model: collects the vocabulary-sized
         # model tables (the ccnet_model collect class)
         "def nb_lang_model",
-        # IVF+SQ8 index growth: loads the index's stored stats +
-        # centroids rows (model state — the append_ivfpq_index class)
-        "def append_ivfsq8_index",
         # training-order store (r9): the offsets sidecar and touched-
         # bucket lists are 256·epochs METADATA rows (the two-level
         # rank's broadcast side) — counts/offsets arithmetic happens
@@ -1604,6 +1595,49 @@ def test_kmeanspar_candidate_collect_is_bounded_per_task(
     assert [len(p) for p in wide_rounds] == [64] * 4
     most = max(max(p) for p in one_rounds + wide_rounds)
     assert most <= KMEANSPAR_CANDS_PER_TASK, (one_rounds, wide_rounds)
+
+
+def test_kmeanspar_init_keeps_the_callers_cache(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """ivf_train_centroids(init="kmeanspar") persists its parsed vector
+    relation for the Lloyd's iterations and runs the k-means|| init over
+    it. Spark keeps one cache entry per plan, so an init that persisted
+    and unpersisted the same plan would drop the caller's cache and every
+    iteration would re-read the parquet. Here the relation must still be
+    cached when the init returns, and the source file is deleted at that
+    point: an iteration that read it would fail. The centroids equal a
+    run over the undeleted file."""
+    import os
+    import shutil
+
+    from vedb_gaze_spark.operators import similarity
+    from vedb_gaze_spark.sources.tables import load_table
+
+    src = tmp_path / "embeddings.parquet"
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), src)
+    want = similarity.ivf_train_centroids(
+        load_table(spark, "embeddings", sf_dir), k=16, iters=2, init="kmeanspar"
+    )
+
+    init = similarity._kmeanspar_init
+    cached = []
+
+    def then_delete(v, k):
+        cents = init(v, k=k)
+        cached.append(v.storageLevel.useMemory)
+        os.remove(src)
+        return cents
+
+    monkeypatch.setattr(similarity, "_kmeanspar_init", then_delete)
+    got = similarity.ivf_train_centroids(
+        load_table(spark, "embeddings", str(tmp_path)),
+        k=16,
+        iters=2,
+        init="kmeanspar",
+    )
+    assert cached == [True]
+    assert got == want
 
 
 def test_task_partials_combine_ignores_task_order(spark):

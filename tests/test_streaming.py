@@ -2138,6 +2138,174 @@ def test_streaming_ivfsq8_serving_prunes_partitions_and_matches_batch(
     assert again == want
 
 
+def _scan(df, path):
+    """Run `df` and return (partitions read, partition filters) of the
+    one parquet scan of `path` in its final plan, walking adaptive
+    query stages and subqueries."""
+
+    def seq(xs):
+        return [xs.apply(i) for i in range(xs.size())]
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif kind.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        else:
+            kids = seq(node.children())
+        yield node
+        for kid in kids + seq(node.subqueries()):
+            yield from walk(kid)
+
+    df.collect()
+    scans = [
+        n
+        for n in walk(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and [str(r.toString()) for r in seq(n.relation().location().rootPaths())]
+        == [f"file:{path}"]
+    ]
+    assert len(scans) == 1, [n.toString() for n in scans]
+    return (
+        int(scans[0].metrics().apply("numPartitions").value()),
+        " ".join(str(e.toString()) for e in seq(scans[0].partitionFilters())),
+    )
+
+
+@pytest.mark.parametrize("kind", ["ivfpq", "ivfsq8", "ivfsq8_mining"])
+def test_ivf_serve_prunes_cells_through_its_own_probe(
+    spark, sf_dir, tmp_path, kind
+):
+    """A served batch reads only its probed cells, and the pruning comes
+    from the kernel's own broadcast probe: the codes scan of the answer
+    plan carries a dynamic-partition-pruning PartitionFilter and reads
+    exactly the cells probed_codes names for the batch, fewer than the
+    index holds. With dynamic partition pruning off, the same plan
+    reads every cell."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from vedb_gaze_spark.operators.similarity import _ivf_sq8_probe, _vecs
+    from vedb_gaze_spark.streaming.serving import (
+        IVFPQServing,
+        IVFSQ8Serving,
+        write_ivfpq_index,
+        write_ivfsq8_index,
+    )
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    idx = str(tmp_path / kind)
+    batch = emb.where(F.col("vec_id") == 3)
+    queries = _vecs(batch).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    if kind == "ivfpq":
+        write_ivfpq_index(emb, idx, iters=1)
+        job = IVFPQServing(idx, str(tmp_path / "out"))
+        probed = job.probed_codes(spark, queries)
+    else:
+        mining = kind == "ivfsq8_mining"
+        write_ivfsq8_index(emb, idx, with_labels=mining)
+        job = IVFSQ8Serving(idx, str(tmp_path / "out"), mine_labels=mining)
+        probed = job.probed_codes(
+            spark, _ivf_sq8_probe(queries, job._load_cents(spark), job.nprobe)
+        )
+    cells = {r["cell"] for r in probed.select("cell").distinct().collect()}
+    on_disk = [d for d in os.listdir(f"{idx}/codes") if d.startswith("cell=")]
+    assert 0 < len(cells) < len(on_disk)
+
+    read, filters = _scan(job._answers(batch), f"{idx}/codes")
+    assert "dynamicpruning" in filters, filters
+    assert read == len(cells), (read, cells)
+
+    key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        read_all, filters_all = _scan(job._answers(batch), f"{idx}/codes")
+    finally:
+        spark.conf.set(key, saved)
+    assert "dynamicpruning" not in filters_all
+    assert read_all == len(on_disk)
+
+
+def test_declared_index_schemas_match_their_writers(spark, sf_dir, tmp_path):
+    """Every stored-index table is read under a declared schema; each
+    one must be the schema its writer produces (inferred from the
+    files), so a writer change cannot silently diverge from the
+    reads."""
+    from vedb_gaze_spark.streaming import serving as S
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    base = str(tmp_path)
+    S.write_pq_index(emb, f"{base}/pq", iters=1)
+    S.write_ivfpq_index(emb, f"{base}/ivfpq", iters=1)
+    S.write_sq8_index(emb, f"{base}/sq8")
+    S.write_ivfsq8_index(emb, f"{base}/ivfsq8")
+    S.write_ivfsq8_index(emb, f"{base}/ivfsq8_labels", with_labels=True)
+    S.write_label_centroids(emb, f"{base}/labels")
+    declared = {
+        "pq/codes": S._CODES_SCHEMA,
+        "pq/vectors": S._VECTORS_SCHEMA,
+        "ivfpq/codes": S._CELL_CODES_SCHEMA,
+        "ivfpq/vectors": S._VECTORS_SCHEMA,
+        "ivfpq/centroids": S._CENTROIDS_SCHEMA,
+        "ivfpq/codebooks": S._CODEBOOKS_SCHEMA,
+        "sq8/codes": S._CODES_SCHEMA,
+        "sq8/stats": S._STATS_SCHEMA,
+        "ivfsq8/codes": S._CELL_CODES_SCHEMA,
+        "ivfsq8/stats": S._STATS_SCHEMA,
+        "ivfsq8/centroids": S._CENTROIDS_SCHEMA,
+        "ivfsq8_labels/codes": S._LABELED_CELL_CODES_SCHEMA,
+        "labels/centroids": S._LABEL_CENTROIDS_SCHEMA,
+    }
+    for table, schema in declared.items():
+        path = f"{base}/{table}"
+        written = spark.read.parquet(path).schema
+        assert written == spark.read.schema(schema).parquet(path).schema, (
+            table,
+            written.simpleString(),
+        )
+
+
+def test_ivfpq_serving_falls_back_to_literal_centroids(
+    spark, sf_dir, tmp_path
+):
+    """An index written before the coarse quantizer was stored has no
+    `{path}/centroids`; it was always written with the P.IVF_CENTROIDS
+    literals, and the server falls back to them: the declared-schema
+    read of the missing directory raises PATH_NOT_FOUND, and the
+    served answers equal batch ann_ivfpq."""
+    import shutil
+
+    import pyspark.sql.functions as F
+    from pyspark.errors import AnalysisException
+
+    from vedb_gaze_spark.operators.similarity import ann_ivfpq
+    from vedb_gaze_spark.plans import params as P
+    from vedb_gaze_spark.streaming.serving import (
+        _CENTROIDS_SCHEMA,
+        IVFPQServing,
+        write_ivfpq_index,
+    )
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    idx = str(tmp_path / "pre_r8_index")
+    write_ivfpq_index(emb, idx)
+    shutil.rmtree(f"{idx}/centroids")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        spark.read.schema(_CENTROIDS_SCHEMA).parquet(f"{idx}/centroids")
+
+    job = IVFPQServing(idx, str(tmp_path / "out"))
+    job.process(emb.where(F.col("vec_id") < P.ANN_N_QUERIES), 0)
+    assert job._cents == [list(map(float, c)) for c in P.IVF_CENTROIDS]
+    got = {tuple(r) for r in job.results(spark).collect()}
+    want = {tuple(r) for r in ann_ivfpq(emb).collect()}
+    assert got == want and len(want) > 0
+
+
 def test_streaming_nb_lang_id_matches_batch(spark, sf_dir):
     """The frozen-model NB language-ID scorer over a stream reproduces
     the batch nb_lang_id rows EXACTLY (exact long log-likelihood sums,

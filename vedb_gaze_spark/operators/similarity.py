@@ -854,7 +854,7 @@ def ivf_train_centroids(
     # parquet and re-parses the arrays
     v = _vecs(embeddings).persist()
     if init == "kmeanspar":
-        cents = kmeanspar_init(embeddings, k=k)
+        cents = _kmeanspar_init(v, k=k)
     else:
         # k rows: sorted on the driver, not by a distributed sort
         rows0 = sorted(
@@ -1973,11 +1973,29 @@ def kmeanspar_init(
     pass (each task counts its rows' nearest candidate); greedy
     weighted k-means++ and weighted Lloyd's then run on the ≈l·rounds
     candidates in numpy — never on corpus rows."""
+    v = _vecs(embeddings).persist()
+    try:
+        return _kmeanspar_init(v, k, l, rounds, salt)
+    finally:
+        v.unpersist()
+
+
+def _kmeanspar_init(
+    v: DataFrame,
+    k: int = 16,
+    l: int | None = None,
+    rounds: int = 4,
+    salt: str = "kpp",
+) -> list[list[float]]:
+    """kmeanspar_init over the caller's parsed (vec_id, v) relation,
+    which it neither persists nor unpersists: Spark's CacheManager keeps
+    one entry per plan, so unpersisting here would also drop the cache
+    of a caller that persisted the same plan (ivf_train_centroids, whose
+    Lloyd's iterations then re-read the parquet)."""
     import numpy as np
 
     if l is None:
         l = 2 * k
-    v = _vecs(embeddings).persist()
     first = v.orderBy("vec_id").limit(1).collect()[0]["v"]
     C = np.array([list(map(float, first))], dtype=np.float64)
     for r in range(rounds):
@@ -2036,7 +2054,6 @@ def kmeanspar_init(
         return (w,), None
 
     (w,), _ = _task_partials(v, nearest)
-    v.unpersist()
     w = w.astype(np.float64)
 
     # greedy weighted k-means++ on the candidates (deterministic: argmax
@@ -2135,19 +2152,22 @@ def _ivf_sq8_probe(
     same 6dp quantization the corpus assignment and the SQL oracle
     use, so the probe set is engine-stable (ties cannot flip in one
     engine only). Any extra query columns (e.g. the miner's qlbl)
-    pass through."""
+    pass through.
+
+    Row-local: each query sorts its own (−dot, cell) pairs and keeps
+    the first nprobe — the order of a row_number over (dot DESC, cell)
+    per query, without that window's shuffle. An exchange under the
+    probe would keep dynamic partition pruning from reusing the
+    kernel's broadcast of it, and a stored index's codes scan would
+    then read every cell (IVFSQ8Serving)."""
     carry = [c for c in queries.columns if c not in ("query_id", "qv")]
-    probes = queries.withColumn(
-        "dots", F.expr(_dots_expr_for(cents, "qv"))
-    ).select(
-        "query_id", "qv", *carry, F.posexplode("dots").alias("cell", "d")
+    top = F.expr(
+        f"slice(sort_array(transform({_dots_expr_for(cents, 'qv')}, "
+        f"(d, i) -> struct(-d AS nd, i AS cell))), 1, {int(n_probes)})"
     )
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("d"), "cell")
-    return (
-        probes.withColumn("pr", F.row_number().over(wprobe))
-        .where(F.col("pr") <= n_probes)
-        .select("query_id", "qv", *carry, "cell")
-    )
+    return queries.select(
+        "query_id", "qv", *carry, F.explode(top).alias("p")
+    ).select("query_id", "qv", *carry, F.col("p.cell").alias("cell"))
 
 
 def _ivf_sq8_search(

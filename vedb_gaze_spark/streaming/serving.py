@@ -19,6 +19,17 @@ driver or broadcast by hand), so the index can be arbitrarily large
 and sharded — the driver holds only the m·k_sub·d_sub codebook floats
 (model state).
 
+The cell-partitioned servers (IVFPQServing, IVFSQ8Serving) run ONE
+probe per batch: the shared kernel's cell equi-join against its
+broadcast probe lets Spark's dynamic partition pruning (DPP) put a
+`dynamicpruningexpression` PartitionFilter on the codes scan, which
+reuses the kernel's own broadcast, so the scan reads only the probed
+cells' files and no cell ids travel through the driver.
+
+Every stored table is read under a declared schema (a module constant
+beside the writer that produces it): a read infers nothing, so it runs
+no schema-inference job.
+
 Exactly-once: output dirs are keyed by batch_id and written with
 overwrite — a replayed micro-batch (crash between write and
 checkpoint commit) rewrites the same directory with the same rows
@@ -36,6 +47,11 @@ _OUT_SCHEMA = (
     "query_id bigint, rank int, neighbor_id bigint, "
     "adc_score double, cosine double"
 )
+
+# write_pq_index / write_sq8_index codes, and the rerank vector store
+# of write_pq_index / write_ivfpq_index
+_CODES_SCHEMA = "neighbor_id bigint, codes array<int>"
+_VECTORS_SCHEMA = "neighbor_id bigint, nv array<double>"
 
 
 def write_pq_index(
@@ -106,8 +122,12 @@ class PQServing:
         queries = _vecs(batch_queries).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
         )
-        codes = spark.read.parquet(f"{self.index_path}/codes")
-        full = spark.read.parquet(f"{self.index_path}/vectors")
+        codes = spark.read.schema(_CODES_SCHEMA).parquet(
+            f"{self.index_path}/codes"
+        )
+        full = spark.read.schema(_VECTORS_SCHEMA).parquet(
+            f"{self.index_path}/vectors"
+        )
         out = _pq_search(
             queries, codes, full, self.books, self.k, self.rerank_mult
         )
@@ -119,6 +139,31 @@ class PQServing:
         return spark.read.schema(_OUT_SCHEMA).option(
             "recursiveFileLookup", "true"
         ).parquet(self.out_dir)
+
+
+# write_ivfpq_index / write_ivfsq8_index: codes partitioned by cell (the
+# partition column reads back last), and the coarse quantizer
+_CELL_CODES_SCHEMA = _CODES_SCHEMA + ", cell int"
+_CENTROIDS_SCHEMA = "cents array<array<double>>"
+_CODEBOOKS_SCHEMA = "books array<array<array<double>>>"
+
+
+def _read_cents(spark: SparkSession, path: str) -> list[list[float]]:
+    """A stored index's coarse quantizer: its ONE `{path}/centroids`
+    row of model state (n_cells·dim floats), never data rows."""
+    row = spark.read.schema(_CENTROIDS_SCHEMA).parquet(
+        f"{path}/centroids"
+    ).collect()[0]
+    return [list(map(float, c)) for c in row["cents"]]
+
+
+def _read_books(spark: SparkSession, path: str) -> list[list[list[float]]]:
+    """A stored IVFADC index's residual codebooks: its ONE
+    `{path}/codebooks` row of model state (m·k_sub·d_sub floats)."""
+    row = spark.read.schema(_CODEBOOKS_SCHEMA).parquet(
+        f"{path}/codebooks"
+    ).collect()[0]
+    return [[list(map(float, c)) for c in book] for book in row["books"]]
 
 
 def write_ivfpq_index(
@@ -133,8 +178,9 @@ def write_ivfpq_index(
     """IVFADC serving index (the ann_ivfpq layout, stored): residual PQ
     codes written PARTITIONED BY coarse cell — `codes/cell=N/` — so a
     serving batch that probes nprobe cells READS nprobe/n_cells of the
-    index via plain parquet partition pruning (the physical realization
-    of the inverted file; the same partition-keyed layout
+    index via parquet partition pruning, driven by the serve's own
+    broadcast probe through dynamic partition pruning (the physical
+    realization of the inverted file; the same partition-keyed layout
     streaming/maintenance.py uses for bucket overwrite). Rerank vectors
     stored unpartitioned (fetched by id, candidate-sized reads).
 
@@ -169,11 +215,11 @@ def write_ivfpq_index(
     ).write.mode("overwrite").parquet(f"{path}/vectors")
     spark = embeddings.sparkSession
     spark.createDataFrame(
-        [(cents,)], "cents array<array<double>>"
+        [(cents,)], _CENTROIDS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     spark.createDataFrame(
         [([[list(map(float, c)) for c in book] for book in books],)],
-        "books array<array<array<double>>>",
+        _CODEBOOKS_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
     return books
 
@@ -200,17 +246,13 @@ def append_ivfpq_index(embeddings_new: DataFrame, path: str) -> None:
     )
 
     spark = embeddings_new.sparkSession
-    cents = [
-        list(map(float, c))
-        for c in spark.read.parquet(f"{path}/centroids").collect()[0]["cents"]
-    ]
-    books = [
-        [list(map(float, c)) for c in book]
-        for book in spark.read.parquet(f"{path}/codebooks").collect()[0][
-            "books"
-        ]
-    ]
-    existing = spark.read.parquet(f"{path}/codes").select("neighbor_id")
+    cents = _read_cents(spark, path)
+    books = _read_books(spark, path)
+    existing = (
+        spark.read.schema(_CELL_CODES_SCHEMA)
+        .parquet(f"{path}/codes")
+        .select("neighbor_id")
+    )
     fresh = (
         _vecs(embeddings_new)
         .select(F.col("vec_id"), F.col("v"))
@@ -233,12 +275,13 @@ def append_ivfpq_index(embeddings_new: DataFrame, path: str) -> None:
 
 class IVFPQServing:
     """foreachBatch handler over the cell-partitioned IVFADC index:
-    per micro-batch, coarse-probe the batch's queries (numpy over the
-    bounded query set), push `cell IN (probed)` into the codes scan —
-    partition pruning reads only the probed cells' files — and run the
-    shared _ivfpq_search kernel. Same idempotent batch-id-versioned
-    output contract as PQServing. The driver holds codebooks + the
-    probed-cell id set (≤ n_cells ints) — model state, never rows."""
+    per micro-batch, run the shared _ivfpq_search kernel over the whole
+    codes relation. The kernel probes the batch's queries once (numpy
+    over the bounded query set) and equi-joins the codes on `cell`
+    against that broadcast probe, so dynamic partition pruning reads
+    only the probed cells' files. Same idempotent batch-id-versioned
+    output contract as PQServing. The driver holds codebooks and coarse
+    centroids — model state, never rows or cell ids."""
 
     def __init__(
         self,
@@ -262,12 +305,7 @@ class IVFPQServing:
         written by write_ivfpq_index) when none were handed in — model
         state (m·k_sub·d_sub floats), loaded once per job."""
         if self.books is None:
-            row = spark.read.parquet(
-                f"{self.index_path}/codebooks"
-            ).collect()[0]
-            self.books = [
-                [list(map(float, c)) for c in book] for book in row["books"]
-            ]
+            self.books = _read_books(spark, self.index_path)
         return self.books
 
     def _load_cents(self, spark: SparkSession) -> list[list[float]]:
@@ -275,16 +313,15 @@ class IVFPQServing:
         written by write_ivfpq_index) — residual codes only decode
         under the centroids they were encoded against. Falls back to
         the P.IVF_CENTROIDS literals for pre-r8 indexes that did not
-        persist theirs (which were always written with the literals).
-        Model state: n_cells·dim floats, loaded once per job."""
+        persist theirs (which were always written with the literals):
+        the declared-schema read of the missing directory raises
+        PATH_NOT_FOUND. Model state: n_cells·dim floats, loaded once
+        per job."""
         if self._cents is None:
             from pyspark.errors import AnalysisException
 
             try:
-                row = spark.read.parquet(
-                    f"{self.index_path}/centroids"
-                ).collect()[0]
-                self._cents = [list(map(float, c)) for c in row["cents"]]
+                self._cents = _read_cents(spark, self.index_path)
             except AnalysisException:
                 self._cents = [list(map(float, c)) for c in P.IVF_CENTROIDS]
         return self._cents
@@ -292,10 +329,12 @@ class IVFPQServing:
     def probed_codes(
         self, spark: SparkSession, queries: DataFrame
     ) -> DataFrame:
-        """The pruned codes scan for a query batch: collects the probed
-        CELL IDS (≤ n_cells ints — partition metadata, not data) and
-        filters the partition column, which parquet answers with file
-        pruning, not a full scan."""
+        """The codes a serve of `queries` reads: the probed cells'
+        partitions, found by collecting the probed CELL IDS (≤ n_cells
+        ints) and filtering the partition column. Not on the serve
+        path — process prunes through the kernel's own broadcast probe
+        (dynamic partition pruning) and reads the same partitions; this
+        runs a second probe to show which ones."""
         from vedb_gaze_spark.operators.similarity import _ivf_probe
 
         cents = self._load_cents(spark)
@@ -308,32 +347,53 @@ class IVFPQServing:
                 .collect()
             }
         )
-        codes = spark.read.parquet(f"{self.index_path}/codes")
+        codes = spark.read.schema(_CELL_CODES_SCHEMA).parquet(
+            f"{self.index_path}/codes"
+        )
         return codes.where(F.col("cell").isin([int(c) for c in cells]))
 
-    def process(self, batch_queries: DataFrame, batch_id: int) -> None:
+    def _answers(self, batch_queries: DataFrame) -> DataFrame:
+        """The answer plan of one micro-batch (what process writes)."""
         from vedb_gaze_spark.operators.similarity import (
             _ivfpq_search,
             _vecs,
         )
 
         spark = batch_queries.sparkSession
-        cents = self._load_cents(spark)
         queries = _vecs(batch_queries).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
         )
-        codes = self.probed_codes(spark, queries)
-        full = spark.read.parquet(f"{self.index_path}/vectors")
-        out = _ivfpq_search(
-            queries, codes, full, self._load_books(spark), cents,
-            self.k, self.nprobe, self.rerank_mult,
+        codes = spark.read.schema(_CELL_CODES_SCHEMA).parquet(
+            f"{self.index_path}/codes"
         )
-        out.write.mode("overwrite").parquet(f"{self.out_dir}/batch={batch_id}")
+        full = spark.read.schema(_VECTORS_SCHEMA).parquet(
+            f"{self.index_path}/vectors"
+        )
+        return _ivfpq_search(
+            queries, codes, full, self._load_books(spark),
+            self._load_cents(spark), self.k, self.nprobe, self.rerank_mult,
+        )
+
+    def process(self, batch_queries: DataFrame, batch_id: int) -> None:
+        self._answers(batch_queries).write.mode("overwrite").parquet(
+            f"{self.out_dir}/batch={batch_id}"
+        )
 
     def results(self, spark: SparkSession) -> DataFrame:
         return spark.read.schema(_OUT_SCHEMA).option(
             "recursiveFileLookup", "true"
         ).parquet(self.out_dir)
+
+
+# write_sq8_index / write_ivfsq8_index: the scalar quantizer
+_STATS_SCHEMA = "mn array<double>, mx array<double>"
+
+
+def _read_stats(spark: SparkSession, path: str) -> list[tuple[float, float]]:
+    """A stored SQ8 index's quantizer: its ONE `{path}/stats` row of
+    model state (per-dim min/max), never data rows."""
+    row = spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
+    return list(zip(map(float, row["mn"]), map(float, row["mx"])))
 
 
 def write_sq8_index(
@@ -351,7 +411,7 @@ def write_sq8_index(
     spark = embeddings.sparkSession
     spark.createDataFrame(
         [([float(mn) for mn, _ in stats], [float(mx) for _, mx in stats])],
-        "mn array<double>, mx array<double>",
+        _STATS_SCHEMA,
     ).write.mode("overwrite").parquet(f"{path}/stats")
     (
         sq8_encode(embeddings, stats)
@@ -383,8 +443,7 @@ class SQ8Serving:
         """The index's own quantizer ({path}/stats — ONE row of model
         state: per-dim min/max), loaded once per job, never data rows."""
         if self._stats is None:
-            row = spark.read.parquet(f"{self.index_path}/stats").collect()[0]
-            self._stats = list(zip(map(float, row["mn"]), map(float, row["mx"])))
+            self._stats = _read_stats(spark, self.index_path)
         return self._stats
 
     def process(self, batch_queries: DataFrame, batch_id: int) -> None:
@@ -395,7 +454,9 @@ class SQ8Serving:
         queries = _vecs(batch_queries).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
         )
-        codes = spark.read.parquet(f"{self.index_path}/codes")
+        codes = spark.read.schema(_CODES_SCHEMA).parquet(
+            f"{self.index_path}/codes"
+        )
         out = _sq8_search(queries, codes, stats, self.k)
         out.write.mode("overwrite").parquet(
             f"{self.out_dir}/batch={batch_id}"
@@ -405,6 +466,11 @@ class SQ8Serving:
         return spark.read.schema(
             "query_id bigint, rank int, neighbor_id bigint, score_sq8 double"
         ).option("recursiveFileLookup", "true").parquet(self.out_dir)
+
+
+# write_ivfsq8_index(with_labels=True) codes: each vector's label rides
+# beside its codes
+_LABELED_CELL_CODES_SCHEMA = _CODES_SCHEMA + ", nlbl int, cell int"
 
 
 def write_ivfsq8_index(
@@ -461,10 +527,10 @@ def write_ivfsq8_index(
     spark = embeddings.sparkSession
     spark.createDataFrame(
         [([float(mn) for mn, _ in stats], [float(mx) for _, mx in stats])],
-        "mn array<double>, mx array<double>",
+        _STATS_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
     spark.createDataFrame(
-        [(cents,)], "cents array<array<double>>"
+        [(cents,)], _CENTROIDS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     return stats
 
@@ -472,10 +538,11 @@ def write_ivfsq8_index(
 class IVFSQ8Serving:
     """foreachBatch handler over the cell-partitioned IVF+SQ8 index:
     per micro-batch, probe the queries with the ROUNDED dot ranking
-    (the batch face's own probe — engine-stable ties), push `cell IN
-    (probed)` into the codes scan (parquet partition pruning), and run
-    the shared _ivf_sq8_search kernel. Batch-id-versioned idempotent
-    output, like every server here."""
+    (the batch face's own probe — engine-stable ties) and run the
+    shared _ivf_sq8_search kernel over the whole codes relation; its
+    cell equi-join against the broadcast probe lets dynamic partition
+    pruning read only the probed cells' files. Batch-id-versioned
+    idempotent output, like every server here."""
 
     def __init__(
         self,
@@ -500,37 +567,39 @@ class IVFSQ8Serving:
     def _load_stats(self, spark: SparkSession) -> list[tuple[float, float]]:
         """The index's stored quantizer stats (ONE row of model state)."""
         if self._stats is None:
-            row = spark.read.parquet(f"{self.index_path}/stats").collect()[0]
-            self._stats = list(
-                zip(map(float, row["mn"]), map(float, row["mx"]))
-            )
+            self._stats = _read_stats(spark, self.index_path)
         return self._stats
 
     def _load_cents(self, spark: SparkSession) -> list[list[float]]:
         """The index's OWN coarse quantizer (one row of model state)."""
         if self._cents is None:
-            row = spark.read.parquet(
-                f"{self.index_path}/centroids"
-            ).collect()[0]
-            self._cents = [list(map(float, c)) for c in row["cents"]]
+            self._cents = _read_cents(spark, self.index_path)
         return self._cents
+
+    def _codes(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(
+            _LABELED_CELL_CODES_SCHEMA if self.mine_labels
+            else _CELL_CODES_SCHEMA
+        ).parquet(f"{self.index_path}/codes")
 
     def probed_codes(
         self, spark: SparkSession, probed: DataFrame
     ) -> DataFrame:
-        """The pruned codes scan for an already-probed query batch:
-        collects the probed CELL IDS (≤ n_cells ints — partition
-        metadata, not data) and filters the partition column."""
+        """The codes a serve of an already-probed query batch reads:
+        the probed cells' partitions, found by collecting the probed
+        CELL IDS (≤ n_cells ints) and filtering the partition column.
+        Not on the serve path — process prunes through the kernel's own
+        broadcast probe (dynamic partition pruning)."""
         cells = sorted(
             {
                 int(r["cell"])
                 for r in probed.select("cell").distinct().collect()
             }
         )
-        codes = spark.read.parquet(f"{self.index_path}/codes")
-        return codes.where(F.col("cell").isin(cells))
+        return self._codes(spark).where(F.col("cell").isin(cells))
 
-    def process(self, batch_queries: DataFrame, batch_id: int) -> None:
+    def _answers(self, batch_queries: DataFrame) -> DataFrame:
+        """The answer plan of one micro-batch (what process writes)."""
         from vedb_gaze_spark.operators.similarity import (
             _ivf_sq8_probe,
             _ivf_sq8_search,
@@ -560,28 +629,29 @@ class IVFSQ8Serving:
         probed = _ivf_sq8_probe(
             queries, self._load_cents(spark), self.nprobe
         )
-        codes = self.probed_codes(spark, probed)
-        if self.mine_labels:
-            out = _ivf_sq8_search(
-                probed,
-                codes,
-                self._load_stats(spark),
-                self.k,
-                pair_filter=F.col("nlbl") != F.col("qlbl"),
-                extra=[("qlbl", "int"), ("nlbl", "int")],
-            ).select(
-                "query_id",
-                "rank",
-                "neighbor_id",
-                "score_sq8",
-                F.col("qlbl").alias("query_label"),
-                F.col("nlbl").alias("neighbor_label"),
-            )
-        else:
-            out = _ivf_sq8_search(
+        codes = self._codes(spark)
+        if not self.mine_labels:
+            return _ivf_sq8_search(
                 probed, codes, self._load_stats(spark), self.k
             )
-        out.write.mode("overwrite").parquet(
+        return _ivf_sq8_search(
+            probed,
+            codes,
+            self._load_stats(spark),
+            self.k,
+            pair_filter=F.col("nlbl") != F.col("qlbl"),
+            extra=[("qlbl", "int"), ("nlbl", "int")],
+        ).select(
+            "query_id",
+            "rank",
+            "neighbor_id",
+            "score_sq8",
+            F.col("qlbl").alias("query_label"),
+            F.col("nlbl").alias("neighbor_label"),
+        )
+
+    def process(self, batch_queries: DataFrame, batch_id: int) -> None:
+        self._answers(batch_queries).write.mode("overwrite").parquet(
             f"{self.out_dir}/batch={batch_id}"
         )
 
@@ -611,11 +681,13 @@ def append_ivfsq8_index(embeddings_new: DataFrame, path: str) -> None:
     )
 
     spark = embeddings_new.sparkSession
-    srow = spark.read.parquet(f"{path}/stats").collect()[0]
-    stats = list(zip(map(float, srow["mn"]), map(float, srow["mx"])))
-    crow = spark.read.parquet(f"{path}/centroids").collect()[0]
-    cents = [list(map(float, c)) for c in crow["cents"]]
-    existing = spark.read.parquet(f"{path}/codes").select("neighbor_id")
+    stats = _read_stats(spark, path)
+    cents = _read_cents(spark, path)
+    existing = (
+        spark.read.schema(_CELL_CODES_SCHEMA)
+        .parquet(f"{path}/codes")
+        .select("neighbor_id")
+    )
     v = _vecs(embeddings_new)
     fresh = v.join(
         existing, v["vec_id"] == existing["neighbor_id"], "left_anti"
@@ -630,6 +702,10 @@ def append_ivfsq8_index(embeddings_new: DataFrame, path: str) -> None:
         .alias("cell"),
     )
     out.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
+
+
+# write_label_centroids: the per-label centroid model
+_LABEL_CENTROIDS_SCHEMA = "label int, cv array<double>, n_vecs bigint"
 
 
 def write_label_centroids(embeddings: DataFrame, path: str) -> None:
@@ -673,9 +749,9 @@ class LabelSeparationServing:
         if self._cents is None:
             self._cents = [
                 (int(r["label"]), [float(x) for x in r["cv"]])
-                for r in spark.read.parquet(
-                    f"{self.index_path}/centroids"
-                ).collect()
+                for r in spark.read.schema(_LABEL_CENTROIDS_SCHEMA)
+                .parquet(f"{self.index_path}/centroids")
+                .collect()
             ]
         return self._cents
 
