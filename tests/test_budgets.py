@@ -6,10 +6,17 @@ The apply_per_key family: its Python-worker cost is paid per task, so
 its kernel stage (the MapInPandas) may run at most
 spark.sql.shuffle.partitions tasks.
 
-The iterative graph faces, the trained faces and the stored IVFADC
-index's serve and append are job-count-bound: each call must launch the
-same jobs as the last (no relation cached by one call feeds the next)
-within a pinned budget, so a budget change is an explicit diff."""
+The iterative graph faces, the trained faces, the corpus faces and the
+stored IVFADC index's serve and append are job-count-bound: each call
+must launch the same jobs as the last (no relation cached by one call
+feeds the next) within a pinned budget, so a budget change is an
+explicit diff.
+
+Every count here comes from vedb_gaze_spark/tracing.py, the one reader
+of Spark's status store outside perfbench/ (the guard at the end)."""
+
+import re
+from pathlib import Path
 
 import pytest
 
@@ -66,6 +73,23 @@ def test_trained_faces_repeat_the_same_jobs(spark, sf_dir, job_group_run, key):
     assert first == second <= TRAINER_JOB_BUDGET[key], (first, second)
 
 
+# Jobs per call at the same settings, measured with 4 and 8 local cores
+# (the plan build, then the final collect): bpe_stats 59 + 4, semdedup
+# 18 + 3, dedup_clusters 12 + 2, quality_classifier_trained 28 + 1.
+CORPUS_JOB_BUDGET = {
+    "bpe_stats": 63,
+    "semdedup": 21,
+    "dedup_clusters": 14,
+    "quality_classifier_trained": 29,
+}
+
+
+@pytest.mark.parametrize("key", sorted(CORPUS_JOB_BUDGET))
+def test_corpus_faces_repeat_the_same_jobs(spark, sf_dir, job_group_run, key):
+    first, second = _two_calls(spark, sf_dir, job_group_run, key)
+    assert first == second <= CORPUS_JOB_BUDGET[key], (first, second)
+
+
 # Jobs per call of the stored IVFADC index's serve (IVFPQServing.process
 # over a 16-query batch, after the first call has loaded the model) and
 # append (append_ivfpq_index of 50 new vectors), at the same settings
@@ -106,3 +130,57 @@ def test_ivfpq_serve_and_append_repeat_the_same_jobs(
     ]
     assert serves[0] == serves[1] <= IVFPQ_SERVE_JOB_BUDGET, serves
     assert appends[0] == appends[1] <= IVFPQ_APPEND_JOB_BUDGET, appends
+
+
+def test_status_store_is_read_only_by_the_tracer():
+    """No Python file outside vedb_gaze_spark/tracing.py and perfbench/
+    walks Spark's status store: a second walk would be a second
+    definition of what a call cost."""
+    repo = Path(__file__).resolve().parents[1]
+    tracer = repo / "vedb_gaze_spark" / "tracing.py"
+    walk = re.compile(r"statusStore\(\)|getJobIds[F]orGroup")
+    hits = [
+        f"{path.relative_to(repo)}:{n}: {line.strip()}"
+        for path in sorted(repo.rglob("*.py"))
+        if path != tracer and "perfbench" not in path.relative_to(repo).parts
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if walk.search(line)
+    ]
+    assert hits == [], "\n".join(hits)
+
+
+def test_qprobe_reports_counters_plans_and_errors(
+    spark, sf_dir, job_group_run, tmp_path, capsys
+):
+    """scripts/qprobe.py's entry point, in this session: one JSON line
+    per key, with the build and the final collect traced apart, the
+    plan-dump mode, and a broken key reported instead of ending the
+    pass."""
+    import importlib.util
+    import json
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "qprobe", Path(__file__).resolve().parents[1] / "scripts" / "qprobe.py"
+    )
+    qprobe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(qprobe)
+    small = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+
+    def lines(*argv):
+        capsys.readouterr()
+        qprobe.main([*argv, "--sf", small], spark=spark)
+        return [json.loads(ln) for ln in capsys.readouterr().out.splitlines()]
+
+    [probe, bad] = lines("calibration_tps", "no_such_key", "--n", "1")
+    assert probe["key"] == "calibration_tps" and "error" not in probe, probe
+    assert probe["collect"]["jobs"] >= 1 and probe["collect"]["tasks"] >= 1
+    jobs, _ = job_group_run(lambda: QUERIES["calibration_tps"](spark, small).collect())
+    assert probe["build"]["jobs"] + probe["collect"]["jobs"] == jobs
+    assert probe["best_s"] == min(probe["walls"]) and len(probe["walls"]) == 1
+    assert bad["key"] == "no_such_key" and bad["error"].startswith("KeyError")
+
+    [plan] = lines("calibration_tps", "--plan", str(tmp_path))
+    assert set(plan) == {"key", "sf", "build", "plan"}, plan
+    with open(plan["plan"]) as fh:
+        assert "== Physical Plan ==" in fh.read()

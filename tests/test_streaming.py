@@ -2459,6 +2459,53 @@ def test_append_ivfsq8_index_grows_without_rewriting(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def test_append_ivfsq8_keeps_labels_of_a_labeled_index(spark, sf_dir, tmp_path):
+    """An index written with labels stays labeled when it grows: every
+    appended row carries `nlbl`, and mining over the grown index
+    (IVFSQ8Serving(mine_labels=True)) returns exactly the batch
+    mine_hard_negatives_ivfsq8 rows over old ∪ new. The written slice
+    holds every per-dim extreme, so its stored stats are the full
+    corpus's and the miner's own encode is the same quantizer."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from vedb_gaze_spark.operators.similarity import (
+        mine_hard_negatives_ivfsq8,
+        sq8_stats,
+    )
+    from vedb_gaze_spark.plans import params as P
+    from vedb_gaze_spark.streaming.serving import (
+        _LABELED_CELL_CODES_SCHEMA,
+        IVFSQ8Serving,
+        append_ivfsq8_index,
+        write_ivfsq8_index,
+    )
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    vecs = np.array([r["embedding"] for r in rows], dtype=float)
+    extremes = sorted(
+        {int(i) for i in ids[vecs.argmin(axis=0)]}
+        | {int(i) for i in ids[vecs.argmax(axis=0)]}
+    )
+    in_old = (F.col("vec_id") < 300) | F.col("vec_id").isin(extremes)
+    idx = str(tmp_path / "labeled_grow")
+    stats = write_ivfsq8_index(emb.where(in_old), idx, with_labels=True)
+    assert stats == sq8_stats(emb)
+    append_ivfsq8_index(emb.where(~in_old), idx)
+
+    codes = spark.read.schema(_LABELED_CELL_CODES_SCHEMA).parquet(f"{idx}/codes")
+    assert codes.count() == len(rows) - P.ANN_N_QUERIES
+    assert codes.where(F.col("nlbl").isNull()).count() == 0
+
+    job = IVFSQ8Serving(idx, str(tmp_path / "labeled_out"), mine_labels=True)
+    job.process(emb.where(F.col("vec_id") < P.ANN_N_QUERIES), 0)
+    got = {tuple(r) for r in job.results(spark).collect()}
+    want = {tuple(r) for r in mine_hard_negatives_ivfsq8(emb).collect()}
+    assert got == want and len(want) > 0
+
+
 def test_append_ivfsq8_out_of_range_vectors_clamp_to_8bit(
     spark, sf_dir, tmp_path
 ):

@@ -32,7 +32,8 @@ END = "</w>"
 
 def _word_types(documents: DataFrame) -> DataFrame:
     """(word, cnt): the corpus collapsed to its vocabulary — the ONE
-    corpus-sized aggregation in the whole trainer."""
+    corpus-sized aggregation in each tokenizer trainer (this one and
+    operators/unigram.py's)."""
     return (
         documents.where(F.col("text").isNotNull())
         .select(F.explode(F.expr(_TOKENS)).alias("word"))
@@ -145,13 +146,18 @@ def bpe_encode_types(
 def bpe_stats(documents: DataFrame, n_merges: int = 24) -> DataFrame:
     """Per-document subword statistics: train on the corpus in the same
     call (deterministic — integer pair counts, lexicographic
-    tie-breaks), encode the vocabulary, join pieces back to the token
-    stream by word (vocabulary side is model-output-sized; AQE picks
-    the join strategy), and aggregate exact integers per doc."""
+    tie-breaks), encode the vocabulary, and count pieces per doc
+    (_pieces_per_doc)."""
     merges = bpe_train(documents, n_merges=n_merges)
-    types = bpe_encode_types(documents, merges).select(
-        "word", F.expr("size(pieces)").alias("n_pieces_word")
-    )
+    return _pieces_per_doc(documents, bpe_encode_types(documents, merges))
+
+
+def _pieces_per_doc(documents: DataFrame, types: DataFrame) -> DataFrame:
+    """The per-document tail of bpe_stats and unigram_lm_stats: join the
+    encoded vocabulary (word, cnt, pieces) back to the token stream by
+    word (vocabulary side is model-output-sized; AQE picks the join
+    strategy) and aggregate exact integers per doc."""
+    types = types.select("word", F.expr("size(pieces)").alias("n_pieces_word"))
     toks = documents.where(F.col("text").isNotNull()).select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("word")
     )

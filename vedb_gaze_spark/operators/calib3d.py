@@ -14,7 +14,7 @@ alignment between the two direction bundles. Kabsch is globally optimal
 for the squared CHORD distance ‖R·p − r‖²; the bundle adjustment's loss
 is the squared ANGLE arccos(R·p · r) — a different functional whose
 optimum differs slightly under anisotropic jitter. We therefore follow
-the reference's two-stage shape inside one applyInPandas group: Kabsch
+the reference's two-stage shape inside one apply_per_key group: Kabsch
 initializer (one SVD), then a Levenberg–Marquardt polish on the angular
 residuals over the 3 axis-angle parameters (pure numpy — scipy is not
 in this container; the group-local LM on 3 parameters is ~30 lines and
@@ -25,7 +25,7 @@ The test tables carry no 3-D normals, so reference directions derive
 deterministically from event_id (azimuth/elevation integer math) and
 pupil normals are those directions pushed through a fixed ground-truth
 rotation plus deterministic jitter — the operator must recover the
-rotation. Per-user bounded groups via applyInPandas; rows-only oracle
+rotation. Per-user bounded groups via apply_per_key; rows-only oracle
 (SVD is not SQL).
 """
 

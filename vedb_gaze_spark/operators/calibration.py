@@ -8,15 +8,15 @@ Re-expresses vedb_gaze/calibration.py three ways, in ascending fidelity:
 - ``calibration_poly``: calibrate_2d_polynomial (calibration.py:102) with
   the reference's 7-term basis (externals/calibrate_2d.py fit_poly_surface:
   1, x, y, xy, x², y², x²y²) and its two-pass outlier cut — numpy lstsq
-  per user via applyInPandas.
+  per user through functions/grouped.py:apply_per_key.
 - ``calibration_tps``: _fit_tps_gaze_cv (calibration.py:350) — thin-plate
   spline with leave-one-out lambda selection, on CLUSTER-MEDIAN-reduced
   points (the reference's cluster_reduce_fn=np.median path,
   calibration.py:472) so each group is a handful of points no matter the
   raw data volume.
 
-Scale: groups are (user) == (session); applyInPandas fans them across the
-cluster. The mapping step is broadcast-able: fitted coefficients are a
+Scale: groups are (user) == (session); apply_per_key hashes them into
+the session's shuffle partitions, one mapInPandas task per partition. The mapping step is broadcast-able: fitted coefficients are a
 tiny table joined back on the partition key.
 """
 
@@ -90,7 +90,7 @@ def calibration_poly(
 ) -> DataFrame:
     """calibrate_2d_polynomial (calibration.py:102): fit on all points,
     cut outliers at median + k*std of the error distance, refit on
-    inliers. Per-user groups via applyInPandas."""
+    inliers. Per-user groups via apply_per_key."""
     return calibration_poly_points(
         with_gaze(events).where(F.col("conf") > P.MIN_CONFIDENCE),
         max_stds=max_stds,

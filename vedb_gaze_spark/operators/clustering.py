@@ -9,7 +9,7 @@ Two clustering paths, as SURVEY §2.C plans:
 - ``cluster_grid``: density clustering on fixed grid cells — the 100 TB
   path. One groupBy on (user, cell); no pairwise distances, no iteration,
   uniform shuffle keys.
-- ``cluster_dbscan``: exact DBSCAN semantics per user via applyInPandas
+- ``cluster_dbscan``: exact DBSCAN semantics per user via apply_per_key
   (pure numpy — this container has no sklearn). Groups are single-session
   marker epochs: bounded rows by construction, so the O(n²) inside the
   Arrow batch is constant-time per group and embarrassingly parallel
@@ -167,9 +167,9 @@ def cluster_dbscan(
     reference's time normalization trick (marker_parsing.py:366-378:
     rescale + offset so time and space share a comparable range).
 
-    applyInPandas per user: each group is one session's detections —
-    bounded size regardless of fleet scale, Arrow-batched, parallel across
-    the cluster. Points labeled -1 (noise) are dropped
+    apply_per_key per user (functions/grouped.py): each group is one
+    session's detections — bounded size regardless of fleet scale,
+    Arrow-batched, parallel across the cluster. Points labeled -1 (noise) are dropped
     (cut_cluster_outliers=True). cluster_id is the cluster's minimal
     event_id (see _dbscan_numpy) — stable under any row ordering, so the
     full assignment is value-hash oracle-checkable.

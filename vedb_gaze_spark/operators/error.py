@@ -10,7 +10,7 @@ Re-expresses error_computation.py:18 ``compute_error``:
 - ``gaze_error_weighted``: the histogram2d weighting step (:204-213) —
   gaze-density-weighted mean error per spatial bin.
 - ``error_surface_tps``: the TPS error surface on a coarse grid
-  (:173-198, method='tps'), numpy per user via applyInPandas on
+  (:173-198, method='tps'), numpy per user via apply_per_key on
   cluster-reduced points.
 - ``error_surface_grid``: the ``method='griddata'`` surface (:165-166)
   — hull-bounded scattered interpolation of the error field onto the
@@ -632,7 +632,7 @@ def error_grid_qc(
     # user × 120,000 rows — broadcasting that is a driver-memory bet
     # that loses at fleet user counts (r13 verdict #7). Merely
     # omitting the broadcast() hint is NOT enough: the surface comes
-    # out of applyInPandas, whose optimizer size estimate is
+    # out of apply_per_key's mapInPandas, whose optimizer size estimate is
     # child-derived and tiny, so the static planner still picks a
     # broadcast hash join and ships the real 1.3 GiB to the driver
     # (measured: maxResultSize abort at 1,500 users × 120k nodes,

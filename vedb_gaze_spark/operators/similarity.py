@@ -2534,27 +2534,6 @@ def pca_projection_expr(mean, comps, scale, vec_col: str = "v") -> str:
     return f"array({cols})"
 
 
-def pca_projection_expr_hof(mean, comps, scale, vec_col: str = "v") -> str:
-    """The r11 HigherOrderFunction form of pca_projection_expr (one
-    literal matrix through transform/zip_with/aggregate), kept for the
-    PERF_NOTES r12 measurement: analysis-flat (the _centroid_dots_expr
-    lesson) but interpreted per row, which loses to the unrolled
-    codegen form 4× at 10× corpus (~14× marginal). Bit-identical
-    output."""
-    rowmat = ", ".join(
-        "array(" + ", ".join(repr(float(x)) for x in comps[j] * scale[j])
-        + ")"
-        for j in range(comps.shape[0])
-    )
-    mean_lit = "array(" + ", ".join(repr(float(m)) for m in mean) + ")"
-    return (
-        f"transform(array({rowmat}), c -> "
-        f"floor(aggregate(zip_with(zip_with({vec_col}, {mean_lit}, "
-        f"(x, m) -> x - m), c, (x, y) -> x * y), 0D, "
-        f"(acc, x) -> acc + x) * 1e6 + 0.5) / 1e6)"
-    )
-
-
 def mine_hard_negatives_sq8(
     embeddings: DataFrame,
     k: int = P.ANN_K,

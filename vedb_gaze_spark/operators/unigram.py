@@ -32,22 +32,14 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vedb_gaze_spark.functions.core import TOKENS_SQL as _TOKENS, iter_checkpoint
+from vedb_gaze_spark.functions.core import iter_checkpoint
+from vedb_gaze_spark.operators.bpe import _pieces_per_doc, _word_types
 
 MAX_PIECE_LEN = 6
 SEED_VOCAB = 512
 TARGET_VOCAB = 256
 PRUNE_FRAC = 0.25
 EM_ITERS = 3
-
-
-def _word_types(documents: DataFrame) -> DataFrame:
-    return (
-        documents.where(F.col("text").isNotNull())
-        .select(F.explode(F.expr(_TOKENS)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 def _viterbi(word: str, scores: dict[str, int], maxlen: int) -> list[str]:
@@ -204,28 +196,7 @@ def unigram_lm_stats(
 ) -> DataFrame:
     """Per-document subword statistics under the trained unigram model —
     the bpe_stats face for the second tokenizer family: train in the
-    same call (deterministic), encode the vocabulary, join pieces back
-    to the token stream by word, aggregate exact integers per doc."""
+    same call (deterministic), encode the vocabulary, and count pieces
+    per doc through bpe_stats' own tail (bpe._pieces_per_doc)."""
     scores, _ = unigram_train(documents, seed_vocab, target_vocab, em_iters)
-    types = unigram_encode_types(documents, scores).select(
-        "word", F.expr("size(pieces)").alias("n_pieces_word")
-    )
-    toks = documents.where(F.col("text").isNotNull()).select(
-        "doc_id", F.explode(F.expr(_TOKENS)).alias("word")
-    )
-    return (
-        toks.join(types, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_pieces_word").alias("n_pieces"),
-        )
-        .select(
-            "doc_id",
-            "n_words",
-            "n_pieces",
-            F.expr(
-                "floor(n_pieces / cast(n_words as double) * 1e6 + 0.5) / 1e6"
-            ).alias("pieces_per_word"),
-        )
-    )
+    return _pieces_per_doc(documents, unigram_encode_types(documents, scores))

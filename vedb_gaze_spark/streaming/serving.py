@@ -385,15 +385,32 @@ class IVFPQServing:
         ).parquet(self.out_dir)
 
 
-# write_sq8_index / write_ivfsq8_index: the scalar quantizer
-_STATS_SCHEMA = "mn array<double>, mx array<double>"
+# write_sq8_index / write_ivfsq8_index stats: the quantizer, and
+# whether the index's codes carry each vector's label (`nlbl`)
+_STATS_SCHEMA = "mn array<double>, mx array<double>, labeled boolean"
 
 
-def _read_stats(spark: SparkSession, path: str) -> list[tuple[float, float]]:
-    """A stored SQ8 index's quantizer: its ONE `{path}/stats` row of
-    model state (per-dim min/max), never data rows."""
+def _write_stats(
+    spark: SparkSession,
+    stats: list[tuple[float, float]],
+    labeled: bool,
+    path: str,
+) -> None:
+    spark.createDataFrame(
+        [([float(mn) for mn, _ in stats], [float(mx) for _, mx in stats], labeled)],
+        _STATS_SCHEMA,
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+
+def _read_stats(
+    spark: SparkSession, path: str
+) -> tuple[list[tuple[float, float]], bool]:
+    """A stored SQ8 index's quantizer and whether its codes carry labels:
+    its ONE `{path}/stats` row of model state (per-dim min/max), never
+    data rows. `labeled` is null, so False, in an index written before
+    the flag was stored."""
     row = spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
-    return list(zip(map(float, row["mn"]), map(float, row["mx"])))
+    return list(zip(map(float, row["mn"]), map(float, row["mx"]))), bool(row["labeled"])
 
 
 def write_sq8_index(
@@ -408,11 +425,7 @@ def write_sq8_index(
     from vedb_gaze_spark.operators.similarity import sq8_encode, sq8_stats
 
     stats = sq8_stats(embeddings)
-    spark = embeddings.sparkSession
-    spark.createDataFrame(
-        [([float(mn) for mn, _ in stats], [float(mx) for _, mx in stats])],
-        _STATS_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{path}/stats")
+    _write_stats(embeddings.sparkSession, stats, False, path)
     (
         sq8_encode(embeddings, stats)
         .where(F.col("vec_id") >= n_queries)
@@ -443,7 +456,7 @@ class SQ8Serving:
         """The index's own quantizer ({path}/stats — ONE row of model
         state: per-dim min/max), loaded once per job, never data rows."""
         if self._stats is None:
-            self._stats = _read_stats(spark, self.index_path)
+            self._stats, _ = _read_stats(spark, self.index_path)
         return self._stats
 
     def process(self, batch_queries: DataFrame, batch_id: int) -> None:
@@ -490,49 +503,62 @@ def write_ivfsq8_index(
     (`nlbl`) so hard-negative MINING can run cell-pruned over the
     stored index (mine_hard_negatives_ivfsq8's serving path) — the
     label gate then filters the scored stream without any join back to
-    the raw corpus."""
-    from vedb_gaze_spark.operators.similarity import (
-        _dots_expr_for,
-        sq8_encode,
-        sq8_stats,
-    )
+    the raw corpus. The stats row records the choice (`labeled`), so
+    append_ivfsq8_index labels what it appends."""
+    from vedb_gaze_spark.operators.similarity import sq8_stats
 
     cents = [
         list(map(float, c))
         for c in (cents if cents is not None else P.IVF_CENTROIDS)
     ]
     stats = sq8_stats(embeddings)
-    enc = sq8_encode(embeddings, stats).withColumn(
-        "dots", F.expr(_dots_expr_for(cents, "v"))
-    )
-    if with_labels:
-        lab = embeddings.select(
-            F.col("vec_id").alias("_lid"),
-            F.col("label").cast("int").alias("nlbl"),
-        )
-        enc = enc.join(lab, enc["vec_id"] == lab["_lid"]).drop("_lid")
-    cell = (F.expr("array_position(dots, array_max(dots))") - 1).cast("int")
     (
-        enc.where(F.col("vec_id") >= n_queries)
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "codes",
-            cell.alias("cell"),
-            *(["nlbl"] if with_labels else []),
+        _ivfsq8_rows(
+            embeddings.where(F.col("vec_id") >= n_queries),
+            stats,
+            cents,
+            with_labels,
         )
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(f"{path}/codes")
     )
     spark = embeddings.sparkSession
-    spark.createDataFrame(
-        [([float(mn) for mn, _ in stats], [float(mx) for _, mx in stats])],
-        _STATS_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    _write_stats(spark, stats, with_labels, path)
     spark.createDataFrame(
         [(cents,)], _CENTROIDS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     return stats
+
+
+def _ivfsq8_rows(
+    embeddings: DataFrame,
+    stats: list[tuple[float, float]],
+    cents: list[list[float]],
+    labeled: bool,
+) -> DataFrame:
+    """The stored IVF+SQ8 codes rows of embedding rows: neighbor_id,
+    the 8-bit codes, `nlbl` on a labeled index, and the coarse cell.
+    The one row encoder of write_ivfsq8_index and append_ivfsq8_index,
+    so an appended row carries what a written one does."""
+    from vedb_gaze_spark.operators.similarity import (
+        _dots_expr_for,
+        _sq8_codes_expr,
+    )
+
+    v = embeddings.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
+        *([F.col("label").cast("int").alias("nlbl")] if labeled else []),
+    )
+    return v.withColumn("dots", F.expr(_dots_expr_for(cents, "v"))).select(
+        F.col("vec_id").alias("neighbor_id"),
+        _sq8_codes_expr(stats).alias("codes"),
+        *(["nlbl"] if labeled else []),
+        (F.expr("array_position(dots, array_max(dots))") - 1)
+        .cast("int")
+        .alias("cell"),
+    )
 
 
 class IVFSQ8Serving:
@@ -567,7 +593,7 @@ class IVFSQ8Serving:
     def _load_stats(self, spark: SparkSession) -> list[tuple[float, float]]:
         """The index's stored quantizer stats (ONE row of model state)."""
         if self._stats is None:
-            self._stats = _read_stats(spark, self.index_path)
+            self._stats, _ = _read_stats(spark, self.index_path)
         return self._stats
 
     def _load_cents(self, spark: SparkSession) -> list[list[float]]:
@@ -673,35 +699,23 @@ def append_ivfsq8_index(embeddings_new: DataFrame, path: str) -> None:
     meaningless under any other quantizer), anti-join out already-
     indexed ids (idempotent replay), and APPEND under the same cell
     partitioning — pre-existing files byte-identical, served answers
-    over the grown index ≡ the shared kernel over old ∪ new."""
-    from vedb_gaze_spark.operators.similarity import (
-        _dots_expr_for,
-        _sq8_codes_expr,
-        _vecs,
-    )
-
+    over the grown index ≡ the shared kernel over old ∪ new. On an
+    index written with labels, the new rows carry `nlbl` too (read
+    from `embeddings_new`'s `label`)."""
     spark = embeddings_new.sparkSession
-    stats = _read_stats(spark, path)
+    stats, labeled = _read_stats(spark, path)
     cents = _read_cents(spark, path)
     existing = (
         spark.read.schema(_CELL_CODES_SCHEMA)
         .parquet(f"{path}/codes")
         .select("neighbor_id")
     )
-    v = _vecs(embeddings_new)
-    fresh = v.join(
-        existing, v["vec_id"] == existing["neighbor_id"], "left_anti"
+    fresh = embeddings_new.join(
+        existing, embeddings_new["vec_id"] == existing["neighbor_id"], "left_anti"
     )
-    out = fresh.withColumn(
-        "dots", F.expr(_dots_expr_for(cents, "v"))
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        _sq8_codes_expr(stats).alias("codes"),
-        (F.expr("array_position(dots, array_max(dots))") - 1)
-        .cast("int")
-        .alias("cell"),
-    )
-    out.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
+    _ivfsq8_rows(fresh, stats, cents, labeled).write.mode("append").partitionBy(
+        "cell"
+    ).parquet(f"{path}/codes")
 
 
 # write_label_centroids: the per-label centroid model
