@@ -93,11 +93,11 @@ def test_corpus_faces_repeat_the_same_jobs(spark, sf_dir, job_group_run, key):
 # Jobs per call of the stored IVFADC index's serve (IVFPQServing.process
 # over a 16-query batch, after the first call has loaded the model) and
 # append (append_ivfpq_index of 50 new vectors), at the same settings
-# and measured with 4 and 8 local cores: serve 6, append 8. Before the
+# and measured with 4 and 8 local cores: serve 6, append 6. Before the
 # serve pruned through the kernel's own probe and every stored-index
 # read declared its schema, they ran 10 and 11.
 IVFPQ_SERVE_JOB_BUDGET = 6
-IVFPQ_APPEND_JOB_BUDGET = 8
+IVFPQ_APPEND_JOB_BUDGET = 6
 
 
 def test_ivfpq_serve_and_append_repeat_the_same_jobs(

@@ -102,6 +102,20 @@ def test_primitives_are_not_copied_outside_core():
     assert hits == [], "\n".join(hits)
 
 
+def test_nearest_cell_is_not_copied():
+    """IVF cell assignment (argmax with first-match tie-break) is written
+    once under vedb_gaze_spark/, in similarity._nearest_cell."""
+    pkg = Path(__file__).resolve().parents[1] / "vedb_gaze_spark"
+    copy = re.compile(r"array_position\(\s*\w+\s*,\s*array_max\(")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if copy.search(line)
+    ]
+    assert hits == [], "\n".join(hits)
+
+
 def test_exact_jaccard_rounds_half_up_like_duckdb():
     """1 shared element in a union of 128: 1/128 = 0.0078125 exactly.
     DuckDB's round() gives 0.007813 (HALF_UP); Python's round and

@@ -1783,7 +1783,11 @@ def test_append_ivfpq_index_grows_without_rewrite(spark, sf_dir, tmp_path):
     replaying an appended batch is a no-op (neighbor_id anti-join);
     (d) a server handed NO model state (books=None) loads the stored
     codebooks and its answers over the grown index equal the shared
-    search kernel over the same codes."""
+    search kernel over the same codes; (e) `vectors/` holds exactly the
+    ids of `codes/` after the appends, after a replay, and after a
+    replay of a batch whose codes write never ran (a crash between the
+    two writes), so an appended vector, whose exact nearest neighbour
+    is itself, is served."""
     import hashlib
     import os
 
@@ -1819,11 +1823,23 @@ def test_append_ivfpq_index_grows_without_rewrite(spark, sf_dir, tmp_path):
                     out[p] = hashlib.sha256(fh.read()).hexdigest()
         return out
 
+    def stored_ids(store):
+        ids = [r.neighbor_id for r in spark.read.parquet(f"{idx}/{store}")
+               .select("neighbor_id").collect()]
+        assert len(ids) == len(set(ids)), f"{store}/ holds an id twice"
+        return set(ids)
+
     before = file_hashes()
     append_ivfpq_index(
         emb.where((F.col("vec_id") >= cut1) & (F.col("vec_id") < cut2)), idx
     )
-    append_ivfpq_index(emb.where(F.col("vec_id") >= cut2), idx)
+    # the second batch's vectors write commits and its codes write does
+    # not; the replay below must fill codes/ and leave vectors/ as is
+    last = emb.where(F.col("vec_id") >= cut2)
+    _vecs(last).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")
+    ).write.mode("append").parquet(f"{idx}/vectors")
+    append_ivfpq_index(last, idx)
     after = file_hashes()
     for p, h in before.items():
         assert after[p] == h, f"pre-existing index file rewritten: {p}"
@@ -1843,12 +1859,14 @@ def test_append_ivfpq_index_grows_without_rewrite(spark, sf_dir, tmp_path):
         (r.neighbor_id, int(r.cell), tuple(r.codes)) for r in grown.collect()
     }
     assert got == expected and len(got) == n_total - P.ANN_N_QUERIES
+    assert stored_ids("vectors") == stored_ids("codes") == {g[0] for g in got}
 
     n_rows = grown.count()
     append_ivfpq_index(
         emb.where((F.col("vec_id") >= cut1) & (F.col("vec_id") < cut2)), idx
     )
     assert spark.read.parquet(f"{idx}/codes").count() == n_rows
+    assert stored_ids("vectors") == stored_ids("codes") == {g[0] for g in got}
 
     queries = _vecs(emb.where(F.col("vec_id") < P.ANN_N_QUERIES)).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -1867,6 +1885,12 @@ def test_append_ivfpq_index_grows_without_rewrite(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert got_srv == want_srv and len(want_srv) > 0
+
+    appended = [cut1, cut2 - 1, cut2, n_total - 1]
+    selves = IVFPQServing(idx, str(tmp_path / "grow_selves"), books=None)
+    selves.process(emb.where(F.col("vec_id").isin(appended)), 0)
+    served = {(r.query_id, r.neighbor_id) for r in selves.results(spark).collect()}
+    assert {(i, i) for i in appended} <= served, served
 
 
 def test_streaming_novelty_scoring_matches_batch(spark, sf_dir, tmp_path):
@@ -2504,6 +2528,52 @@ def test_append_ivfsq8_keeps_labels_of_a_labeled_index(spark, sf_dir, tmp_path):
     got = {tuple(r) for r in job.results(spark).collect()}
     want = {tuple(r) for r in mine_hard_negatives_ivfsq8(emb).collect()}
     assert got == want and len(want) > 0
+
+
+def test_append_ivfsq8_refuses_a_legacy_labeled_index(spark, sf_dir, tmp_path):
+    """An index written before its stats row recorded `labeled` (stats
+    hold mn/mx only) is appended to as unlabeled; when its codes carry
+    `nlbl`, the append raises and writes nothing rather than add rows
+    without labels."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from vedb_gaze_spark.plans import params as P
+    from vedb_gaze_spark.streaming.serving import (
+        append_ivfsq8_index,
+        write_ivfsq8_index,
+    )
+
+    emb = load_table(spark, "embeddings", sf_dir)
+
+    def legacy_index(name, with_labels):
+        idx = str(tmp_path / name)
+        stats = write_ivfsq8_index(
+            emb.where(F.col("vec_id") < 300), idx, with_labels=with_labels
+        )
+        spark.createDataFrame(
+            [([mn for mn, _ in stats], [mx for _, mx in stats])],
+            "mn array<double>, mx array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{idx}/stats")
+        return idx
+
+    def files(idx):
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(f"{idx}/codes") for f in fs
+        )
+
+    labeled = legacy_index("legacy_labeled", True)
+    before = files(labeled)
+    with pytest.raises(ValueError, match="labeled flag"):
+        append_ivfsq8_index(emb.where(F.col("vec_id") >= 300), labeled)
+    assert files(labeled) == before
+
+    unlabeled = legacy_index("legacy_unlabeled", False)
+    append_ivfsq8_index(emb.where(F.col("vec_id") >= 300), unlabeled)
+    codes = spark.read.parquet(f"{unlabeled}/codes")
+    assert "nlbl" not in codes.columns
+    assert codes.count() == emb.where(F.col("vec_id") >= P.ANN_N_QUERIES).count()
 
 
 def test_append_ivfsq8_out_of_range_vectors_clamp_to_8bit(

@@ -1,8 +1,9 @@
 """Per-key pandas kernels: one Python pass per shuffle partition.
 
 A grouped pandas UDF pays its Python-worker cost per task, not per key:
-about 0.2 s per non-empty task and 20 ms per empty one (4-core host,
-sf0.1), against well under a second of numeric work for 1,500 TPS fits.
+about 0.06 s per task, empty or not, of which about 5 ms is CPU (4-core
+host; PERF_NOTES "Python-worker task start"), against well under a
+second of numeric work for 1,500 TPS fits.
 So the key is hashed into the session's ``spark.sql.shuffle.partitions``
 partitions (at cluster scale the task count follows that setting), and
 one mapInPandas task per partition walks its key-sorted rows, holding

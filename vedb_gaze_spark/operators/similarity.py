@@ -790,6 +790,14 @@ def _dots_expr_for(cents: list[list[float]], vec_col: str) -> str:
     )
 
 
+def _nearest_cell(dots: str) -> Column:
+    """The IVF cell of a row from its `dots` column (_dots_expr_for):
+    the argmax with first-match tie-break, as array_position finds the
+    FIRST occurrence of the (rounded) maximum. The one definition of
+    cell assignment behind every IVF face and stored index."""
+    return (F.expr(f"array_position({dots}, array_max({dots}))") - 1).cast("int")
+
+
 def _task_partials(df: DataFrame, kernel):
     """The one combine of per-task model partials behind every trainer
     (Lloyd's in ivf_train_centroids and pq_train, kmeanspar_init,
@@ -913,7 +921,7 @@ def ann_ivf_trained(
     k-means|| oversampling init (kmeanspar_init)."""
     cents = ivf_train_centroids(embeddings, k=n_cells, iters=iters, init=init)
     v = _vecs(embeddings).withColumn("dots", F.expr(_dots_expr_for(cents, "v")))
-    cell = (F.expr("array_position(dots, array_max(dots))") - 1).cast("int")
+    cell = _nearest_cell("dots")
     corpus = v.where(F.col("vec_id") >= n_queries).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("nv"),
@@ -966,9 +974,7 @@ def ann_ivf(
     clustering as bucketed search; complements ann_lsh (sign buckets)
     and ann_cosine_topk (exact baseline)."""
     v = _vecs(embeddings).withColumn("dots", F.expr(_centroid_dots_expr("v")))
-    # argmax with first-match tie-break: array_position finds the FIRST
-    # occurrence of the (rounded) maximum
-    cell = (F.expr("array_position(dots, array_max(dots))") - 1).cast("int")
+    cell = _nearest_cell("dots")
     corpus = v.where(F.col("vec_id") >= n_queries).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("nv"),
@@ -1052,7 +1058,7 @@ def semdedup(
         else _dots_expr_for(centroids, "v")
     )
     v = _vecs(embeddings).withColumn("dots", F.expr(dots_expr))
-    cell = (F.expr("array_position(dots, array_max(dots))") - 1).cast("int")
+    cell = _nearest_cell("dots")
     assigned = v.select(
         "vec_id",
         "v",
@@ -1801,6 +1807,30 @@ def _sq8_codes_expr(stats: list[tuple[float, float]]) -> Column:
     )
 
 
+def _ivfsq8_rows(
+    embeddings: DataFrame,
+    stats: list[tuple[float, float]],
+    cents: list[list[float]],
+    labeled: bool,
+) -> DataFrame:
+    """The IVF+SQ8 codes rows of embedding rows: neighbor_id, the 8-bit
+    codes, `nlbl` when labeled, and the coarse cell. The one row encoder
+    of write_ivfsq8_index, append_ivfsq8_index (streaming/serving.py)
+    and mine_hard_negatives_ivfsq8, so an appended row carries what a
+    written one does and the batch miner scores the stored rows."""
+    v = embeddings.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
+        *([F.col("label").cast("int").alias("nlbl")] if labeled else []),
+    )
+    return v.withColumn("dots", F.expr(_dots_expr_for(cents, "v"))).select(
+        F.col("vec_id").alias("neighbor_id"),
+        _sq8_codes_expr(stats).alias("codes"),
+        *(["nlbl"] if labeled else []),
+        _nearest_cell("dots").alias("cell"),
+    )
+
+
 def ann_sq8(
     embeddings: DataFrame, k: int = P.ANN_K, n_queries: int = P.ANN_N_QUERIES
 ) -> DataFrame:
@@ -2132,7 +2162,7 @@ def ann_ivf_sq8(
     enc = sq8_encode(embeddings, stats).withColumn(
         "dots", F.expr(_dots_expr_for(cents, "v"))
     )
-    cell = (F.expr("array_position(dots, array_max(dots))") - 1).cast("int")
+    cell = _nearest_cell("dots")
     # repartition barrier: see ann_sq8
     corpus = enc.where(F.col("vec_id") >= n_queries).select(
         F.col("vec_id").alias("neighbor_id"), "codes", cell.alias("cell")
@@ -2613,30 +2643,15 @@ def mine_hard_negatives_ivfsq8(
     cells — the recall trade every IVF front makes."""
     stats = sq8_stats(embeddings)
     cents = [list(map(float, c)) for c in P.IVF_CENTROIDS]
-    base = embeddings.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.col("label").cast("int").alias("lbl"),
-    )
-    enc = base.select(
-        "vec_id",
-        "v",
-        "lbl",
-        _sq8_codes_expr(stats).alias("codes"),
-        F.expr(_dots_expr_for(cents, "v")).alias("dots"),
-    )
-    cell = (F.expr("array_position(dots, array_max(dots))") - 1).cast("int")
-    # repartition barrier: see ann_sq8
-    corpus = enc.where(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"),
-        "codes",
-        cell.alias("cell"),
-        F.col("lbl").alias("nlbl"),
+    # the stored index's row encoder, so batch mining cannot drift from
+    # a labeled index's rows; repartition barrier: see ann_sq8
+    corpus = _ivfsq8_rows(
+        embeddings.where(F.col("vec_id") >= n_queries), stats, cents, True
     ).repartition("neighbor_id")
-    queries = enc.where(F.col("vec_id") < n_queries).select(
+    queries = embeddings.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("lbl").alias("qlbl"),
+        F.col("embedding").cast("array<double>").alias("qv"),
+        F.col("label").cast("int").alias("qlbl"),
     )
     probed = _ivf_sq8_probe(queries, cents, n_probes)
     out = _ivf_sq8_search(

@@ -10,8 +10,33 @@ than hardcoded in operators.
 from __future__ import annotations
 
 import os
+import site
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+# the package's parent directory: a Python process can import the package
+# when this directory is on its sys.path
+_ROOT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+
+
+def local_master_conf(env: Mapping[str, str], cwd: str) -> dict[str, str]:
+    """Builder settings that apply only when this process picks the
+    master. None with SPARK_MASTER_OVERRIDE_DISABLED set: spark-submit's
+    --master wins, and executors may get this package only through
+    --py-files, which a daemon cannot import before its first task.
+    Otherwise ``local[$SPARK_GRAFT_CPUS]``, plus vedb_gaze_spark/pydaemon.py
+    as the Python-worker daemon when that daemon can import this
+    package: the driver JVM starts it from `cwd` with `env`'s PYTHONPATH."""
+    if env.get("SPARK_MASTER_OVERRIDE_DISABLED"):
+        return {}
+    conf = {"spark.master": f"local[{env.get('SPARK_GRAFT_CPUS', '32')}]"}
+    daemon_path = [
+        cwd, *env.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()
+    ]
+    if _ROOT in {os.path.realpath(p) for p in daemon_path if p}:
+        conf["spark.python.daemon.module"] = "vedb_gaze_spark.pydaemon"
+    return conf
 
 
 def get_spark(app_name: str = "vedb-gaze-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -64,11 +89,11 @@ def get_spark(app_name: str = "vedb-gaze-spark", shuffle_partitions: int | None 
         # local mode where localCheckpoint is used instead.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    if not os.environ.get("SPARK_MASTER_OVERRIDE_DISABLED"):
-        # In tests / local runs there is no cluster manager; on a real
-        # cluster spark-submit's --master wins because getOrCreate reuses
-        # the existing session.
-        builder = builder.master(f"local[{cpus}]")
+    # In tests / local runs there is no cluster manager; on a real
+    # cluster spark-submit's --master wins because getOrCreate reuses
+    # the existing session.
+    for k, v in local_master_conf(os.environ, os.getcwd()).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # Cluster deployments set SPARK_GRAFT_CHECKPOINT_DIR to a
     # fault-tolerant path and every iterative spine switches from

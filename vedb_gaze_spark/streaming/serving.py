@@ -236,10 +236,16 @@ def append_ivfpq_index(embeddings_new: DataFrame, path: str) -> None:
     directories gain files, every pre-existing file stays
     byte-identical, and the rerank vector store grows by the same rows.
 
-    Idempotent by construction: an anti-join on neighbor_id against the
-    stored codes drops vectors already indexed, so replaying a batch
-    whose append committed adds nothing. ALL input rows are treated as
-    corpus vectors — the caller owns query/corpus splits."""
+    Idempotent by construction, each store against itself: the vectors
+    write anti-joins `vectors/` and the codes write anti-joins `codes/`
+    on neighbor_id, so replaying a committed batch adds nothing, and a
+    replay after a crash between the two writes fills in whichever
+    store is missing rows. Vectors go first, so a vector that reaches
+    `codes/` (and so can be a rerank candidate) is already in
+    `vectors/`. The writes share no persisted relation: a codes append
+    would re-plan a cached anti-join against the grown codes, and the
+    vectors write after it would read nothing. ALL input rows are
+    treated as corpus vectors — the caller owns query/corpus splits."""
     from vedb_gaze_spark.operators.similarity import (
         _ivfpq_encode_gen,
         _vecs,
@@ -248,29 +254,23 @@ def append_ivfpq_index(embeddings_new: DataFrame, path: str) -> None:
     spark = embeddings_new.sparkSession
     cents = _read_cents(spark, path)
     books = _read_books(spark, path)
-    existing = (
-        spark.read.schema(_CELL_CODES_SCHEMA)
-        .parquet(f"{path}/codes")
-        .select("neighbor_id")
+    new = _vecs(embeddings_new).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v")
     )
-    fresh = (
-        _vecs(embeddings_new)
-        .select(F.col("vec_id"), F.col("v"))
-        .join(
-            existing.select(F.col("neighbor_id").alias("vec_id")),
-            "vec_id",
-            "left_anti",
-        )
-        .persist()
-    )
-    fresh.mapInPandas(
+
+    def missing_from(store: str, schema: str) -> DataFrame:
+        stored = spark.read.schema(schema).parquet(f"{path}/{store}")
+        return new.join(stored.select("neighbor_id"), "neighbor_id", "left_anti")
+
+    missing_from("vectors", _VECTORS_SCHEMA).select(
+        "neighbor_id", F.col("v").alias("nv")
+    ).write.mode("append").parquet(f"{path}/vectors")
+    missing_from("codes", _CELL_CODES_SCHEMA).select(
+        F.col("neighbor_id").alias("vec_id"), "v"
+    ).mapInPandas(
         _ivfpq_encode_gen(books, cents),
         "neighbor_id bigint, cell int, codes array<int>",
     ).write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
-    fresh.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")
-    ).write.mode("append").parquet(f"{path}/vectors")
-    fresh.unpersist()
 
 
 class IVFPQServing:
@@ -404,13 +404,13 @@ def _write_stats(
 
 def _read_stats(
     spark: SparkSession, path: str
-) -> tuple[list[tuple[float, float]], bool]:
+) -> tuple[list[tuple[float, float]], bool | None]:
     """A stored SQ8 index's quantizer and whether its codes carry labels:
     its ONE `{path}/stats` row of model state (per-dim min/max), never
-    data rows. `labeled` is null, so False, in an index written before
-    the flag was stored."""
+    data rows. `labeled` is None in an index written before the flag
+    was stored."""
     row = spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
-    return list(zip(map(float, row["mn"]), map(float, row["mx"]))), bool(row["labeled"])
+    return list(zip(map(float, row["mn"]), map(float, row["mx"]))), row["labeled"]
 
 
 def write_sq8_index(
@@ -505,7 +505,7 @@ def write_ivfsq8_index(
     label gate then filters the scored stream without any join back to
     the raw corpus. The stats row records the choice (`labeled`), so
     append_ivfsq8_index labels what it appends."""
-    from vedb_gaze_spark.operators.similarity import sq8_stats
+    from vedb_gaze_spark.operators.similarity import _ivfsq8_rows, sq8_stats
 
     cents = [
         list(map(float, c))
@@ -529,36 +529,6 @@ def write_ivfsq8_index(
         [(cents,)], _CENTROIDS_SCHEMA
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     return stats
-
-
-def _ivfsq8_rows(
-    embeddings: DataFrame,
-    stats: list[tuple[float, float]],
-    cents: list[list[float]],
-    labeled: bool,
-) -> DataFrame:
-    """The stored IVF+SQ8 codes rows of embedding rows: neighbor_id,
-    the 8-bit codes, `nlbl` on a labeled index, and the coarse cell.
-    The one row encoder of write_ivfsq8_index and append_ivfsq8_index,
-    so an appended row carries what a written one does."""
-    from vedb_gaze_spark.operators.similarity import (
-        _dots_expr_for,
-        _sq8_codes_expr,
-    )
-
-    v = embeddings.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        *([F.col("label").cast("int").alias("nlbl")] if labeled else []),
-    )
-    return v.withColumn("dots", F.expr(_dots_expr_for(cents, "v"))).select(
-        F.col("vec_id").alias("neighbor_id"),
-        _sq8_codes_expr(stats).alias("codes"),
-        *(["nlbl"] if labeled else []),
-        (F.expr("array_position(dots, array_max(dots))") - 1)
-        .cast("int")
-        .alias("cell"),
-    )
 
 
 class IVFSQ8Serving:
@@ -701,9 +671,21 @@ def append_ivfsq8_index(embeddings_new: DataFrame, path: str) -> None:
     partitioning — pre-existing files byte-identical, served answers
     over the grown index ≡ the shared kernel over old ∪ new. On an
     index written with labels, the new rows carry `nlbl` too (read
-    from `embeddings_new`'s `label`)."""
+    from `embeddings_new`'s `label`). An index whose stats row predates
+    the `labeled` flag is read as unlabeled unless its codes carry
+    `nlbl`: appending to such a labeled index raises, since the new rows
+    would lack labels (the one case that pays a schema read)."""
+    from vedb_gaze_spark.operators.similarity import _ivfsq8_rows
+
     spark = embeddings_new.sparkSession
     stats, labeled = _read_stats(spark, path)
+    if labeled is None and "nlbl" in spark.read.parquet(f"{path}/codes").columns:
+        raise ValueError(
+            f"IVF+SQ8 index {path} carries labels (codes/ has nlbl) but its "
+            "stats row does not record them (written before the labeled "
+            "flag); rewrite it with write_ivfsq8_index(with_labels=True) "
+            "before appending"
+        )
     cents = _read_cents(spark, path)
     existing = (
         spark.read.schema(_CELL_CODES_SCHEMA)
@@ -713,9 +695,9 @@ def append_ivfsq8_index(embeddings_new: DataFrame, path: str) -> None:
     fresh = embeddings_new.join(
         existing, embeddings_new["vec_id"] == existing["neighbor_id"], "left_anti"
     )
-    _ivfsq8_rows(fresh, stats, cents, labeled).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/codes")
+    _ivfsq8_rows(fresh, stats, cents, bool(labeled)).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(f"{path}/codes")
 
 
 # write_label_centroids: the per-label centroid model
