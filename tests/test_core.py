@@ -116,6 +116,21 @@ def test_nearest_cell_is_not_copied():
     assert hits == [], "\n".join(hits)
 
 
+def test_scan_split_math_is_not_mirrored():
+    """The spread_scan gate asks the planner for the planned scan's
+    partition count; no module under vedb_gaze_spark/ replays the
+    planner's file-split math from the split confs or file sizes."""
+    pkg = Path(__file__).resolve().parents[1] / "vedb_gaze_spark"
+    copy = re.compile(r"maxPartitionBytes|openCostInBytes|\bgetsize\(")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if copy.search(line)
+    ]
+    assert hits == [], "\n".join(hits)
+
+
 def test_exact_jaccard_rounds_half_up_like_duckdb():
     """1 shared element in a union of 128: 1/128 = 0.0078125 exactly.
     DuckDB's round() gives 0.007813 (HALF_UP); Python's round and

@@ -2456,21 +2456,17 @@ def test_r14_grouped_map_exchange_not_coalescible(spark, sf_dir, kernel_stage_ta
 
 
 def test_r14_spread_scan_gate_is_scale_adaptive(spark, sf_dir):
-    """spread_scan/spread_scan_scatter fire ONLY when the file layout
-    packs into fewer scan partitions than defaultParallelism
-    (_scan_partitions, the planner's maxSplitBytes + bin-packing): the
-    bench-scale single-split documents table is repartitioned, while
-    the same relation under a tiny maxPartitionBytes (so the planner
-    already admits >= parallelism splits) is returned UNTOUCHED — the
-    no-op-at-scale contract that keeps the helper from adding an
-    exchange on a real multi-split table. _scan_partitions must equal
-    the planner's own partition count for every table at 128 MB, 1 MB,
-    64 KB and 4 KB maxPartitionBytes."""
-    import os
-    from urllib.parse import unquote, urlparse
-
+    """spread_scan/spread_scan_scatter fire ONLY when the planned scan has
+    fewer partitions than defaultParallelism: the bench-scale single-split
+    documents table is repartitioned, while the same relation under a
+    tiny maxPartitionBytes (so the planner already admits >= parallelism
+    splits) is returned UNTOUCHED — the no-op-at-scale contract that
+    keeps the helper from adding an exchange on a real multi-split
+    table. For every table at 128 MB, 1 MB, 64 KB and 4 KB
+    maxPartitionBytes the gate fires exactly when a fresh read plans
+    fewer scan partitions than defaultParallelism."""
     from vedb_gaze_spark.functions.core import (
-        _scan_partitions,
+        _scan_is_compact,
         spread_scan,
         spread_scan_scatter,
     )
@@ -2480,6 +2476,7 @@ def test_r14_spread_scan_gate_is_scale_adaptive(spark, sf_dir):
     assert spread_scan(docs, "doc_id") is not docs
     assert spread_scan_scatter(docs, "doc_id") is not docs
 
+    par = spark.sparkContext.defaultParallelism
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
@@ -2489,16 +2486,68 @@ def test_r14_spread_scan_gate_is_scale_adaptive(spark, sf_dir):
         for maxpb in (128 << 20, 1 << 20, 64 << 10, 4 << 10):
             spark.conf.set("spark.sql.files.maxPartitionBytes", str(maxpb))
             for name in TABLES:
-                df = load_table(spark, name, sf_dir)
-                sizes = [
-                    os.path.getsize(unquote(urlparse(f).path))
-                    for f in df.inputFiles()
-                ]
-                assert _scan_partitions(spark, sizes) == (
-                    df.rdd.getNumPartitions()
-                ), (name, maxpb)
+                planned = load_table(spark, name, sf_dir).rdd.getNumPartitions()
+                assert _scan_is_compact(load_table(spark, name, sf_dir)) == (
+                    planned < par
+                ), (name, maxpb, planned)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_spread_scan_gate_holds_on_a_cached_scan(spark, sf_dir):
+    """Persisting the documents file does not flip the gate: a fresh
+    read then plans an in-memory scan of the cached relation, with the
+    same partition count, and still spreads."""
+    from vedb_gaze_spark.functions.core import (
+        _scan_is_compact,
+        spread_scan_scatter,
+    )
+    from vedb_gaze_spark.sources.tables import load_table
+
+    fresh = load_table(spark, "documents", sf_dir)
+    before = _scan_is_compact(fresh)
+    assert spread_scan_scatter(fresh, "doc_id") is not fresh
+    cached = load_table(spark, "documents", sf_dir).persist()
+    try:
+        cached.count()
+        again = load_table(spark, "documents", sf_dir)
+        plan = again._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        assert _scan_is_compact(again) == before
+        assert spread_scan_scatter(again, "doc_id") is not again
+    finally:
+        cached.unpersist()
+
+
+def test_spread_scan_gate_runs_no_job(spark, sf_dir):
+    """The gate reads the planned scan's partition count without a job,
+    and refuses an input with an exchange (reading its partitions would
+    run the stage below the exchange), also without a job: in its own
+    plan, or in a persisted, not yet materialized plan it reads."""
+    from vedb_gaze_spark.functions.core import (
+        _scan_is_compact,
+        spread_scan_scatter,
+    )
+    from vedb_gaze_spark.sources.tables import load_table
+    from vedb_gaze_spark.tracing import trace
+
+    docs = load_table(spark, "documents", sf_dir)
+    t = trace(spark, lambda: _scan_is_compact(docs))
+    assert (t.result, t.jobs) == (True, 0)
+    counts = docs.groupBy("lang").count()
+    t = trace(spark, lambda: spread_scan_scatter(counts, "lang"))
+    assert t.result is counts
+    assert t.jobs == 0
+    cached = docs.groupBy("lang").count().persist()
+    try:
+        again = docs.groupBy("lang").count()
+        plan = again._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        t = trace(spark, lambda: spread_scan_scatter(again, "lang"))
+        assert t.result is again
+        assert t.jobs == 0
+    finally:
+        cached.unpersist()
 
 
 def test_r14_embed_project_rows_equals_posexplode_of_array_face(spark, sf_dir):

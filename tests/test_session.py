@@ -1,13 +1,13 @@
 """session.py and pydaemon.py: the local master's Python-worker daemon
 re-reads a zip archive's directory at task start only when the archive
-changed, and a session whose master comes from spark-submit keeps
-pyspark's own daemon."""
+changed, a session whose master comes from spark-submit keeps pyspark's
+own daemon, and the default driver heap fits the host."""
 
 import os
 
 import pandas as pd
 
-from vedb_gaze_spark.session import _ROOT, local_master_conf
+from vedb_gaze_spark.session import _ROOT, default_driver_memory, local_master_conf
 
 DAEMON = "spark.python.daemon.module"
 
@@ -77,3 +77,11 @@ def test_daemon_is_set_for_the_local_master_only(tmp_path):
     assert DAEMON not in local_master_conf({}, elsewhere)
     assert local_master_conf({"PYTHONPATH": os.pathsep.join(["/nonexistent", _ROOT])},
                              elsewhere)[DAEMON] == "vedb_gaze_spark.pydaemon"
+
+
+def test_driver_memory_default_is_half_the_host_up_to_48g():
+    gib = 1 << 30
+    assert default_driver_memory(4096, 16 * gib // 4096) == "8192m"
+    assert default_driver_memory(16384, 15 * gib // 16384) == "7680m"
+    assert default_driver_memory(4096, 96 * gib // 4096) == "49152m"
+    assert default_driver_memory(4096, 512 * gib // 4096) == "49152m"

@@ -93,41 +93,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-
-def _size_bytes(conf_val: str, default: int = 128 << 20) -> int:
-    """Parse a Spark byte-size conf string ('134217728', '128m', '1g',
-    '1t'). Unparsable values WARN and fall back to ``default`` rather
-    than silently flipping the spread_scan gate (ADVICE r14)."""
-    s = conf_val.strip().lower()
-    mult = 1
-    for suf, m in (
-        ("k", 1 << 10),
-        ("m", 1 << 20),
-        ("g", 1 << 30),
-        ("t", 1 << 40),
-        ("p", 1 << 50),
-    ):
-        if s.endswith(suf + "b"):
-            s, mult = s[:-2], m
-            break
-        if s.endswith(suf):
-            s, mult = s[:-1], m
-            break
-    if s.endswith("b"):
-        s = s[:-1]
-    try:
-        return int(s) * mult
-    except ValueError:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "unparsable byte-size conf value %r; assuming %d bytes",
-            conf_val,
-            default,
-        )
-        return default
-
-
 def spread_scan(df, *keys: str):
     """Deterministic key-hash repartition of a COMPACT source relation
     before a row-expanding, CPU-dense stage (char-shingle explode +
@@ -144,113 +109,21 @@ def spread_scan(df, *keys: str):
     is satisfied — no second shuffle appears; plan-pinned in tests).
 
     Scale-adaptivity rather than a local[32] constant: the repartition
-    only fires when the source CANNOT already feed every core — i.e.
-    the file layout packs into fewer scan partitions than
-    defaultParallelism (the planner's own split math, mirrored exactly
-    in _scan_partitions: maxSplitBytes with the openCostInBytes and
-    bytesPerCore terms + greedy bin-packing). A 100 TB table
-    has thousands of splits → no-op, zero plan change. A one-row-group
-    bench file (or any small/freshly-compacted table on a real cluster)
+    fires only when the planned scan has fewer partitions than
+    defaultParallelism (_scan_is_compact asks the planner). A table
+    with thousands of splits gets no plan change. A one-row-group bench
+    file (or any small or freshly compacted table, on any filesystem)
     otherwise serializes the whole hashing pass onto ONE task (measured
     sf0.1: the 6 M-md5 shingle pass ran single-core — 4.3 s of a 5.5 s
-    query). Non-local URIs and un-stat-able sources conservatively
-    no-op. Partition count is defaultParallelism (the cluster's core
-    budget), never a hard-coded number; the hash keys keep the
+    query). Any compact planned leaf is spread, not only a file scan
+    (an in-memory cached scan, a LocalTableScan, an RDD scan); an input
+    whose plan holds an exchange is returned unchanged. Partition count is defaultParallelism (the cluster's
+    core budget), never a hard-coded number; the hash keys keep the
     placement deterministic under task retry (guide §2.5)."""
     if not _scan_is_compact(df):
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par, *[F.col(k) for k in keys])
-
-
-def _scan_is_compact(df) -> bool:
-    """The firing gate of spread_scan and spread_scan_scatter: True when
-    the planner would pack the input files of ``df`` into fewer scan
-    partitions than defaultParallelism — i.e. the source cannot feed
-    every core by itself. Non-local URIs, un-stat-able sources and
-    fileless plans conservatively return False. inputFiles() resolves
-    through the CacheManager, so a plan matching a persisted relation
-    reports zero files and the gate reads False."""
-    import os as _os
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return False
-    sizes = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("file", ""):
-            return False
-        try:
-            sizes.append(_os.path.getsize(unquote(u.path)))
-        except OSError:
-            return False
-    if not sizes:
-        return False
-    spark = df.sparkSession
-    return _scan_partitions(spark, sizes) < spark.sparkContext.defaultParallelism
-
-
-def _scan_partitions(spark, sizes: list[int]) -> int:
-    """Mirror of the planner's file-split bin-packing
-    (FilePartition.maxSplitBytes + getFilePartitions): how many scan
-    partitions this file layout actually produces. The previous
-    hand-rolled estimate (len(files) + bytes // maxPartitionBytes)
-    ignored openCostInBytes and the bytesPerCore term, so a
-    many-tiny-files layout could count as >= defaultParallelism splits
-    while the planner packed it into far fewer (ADVICE r14)."""
-    maxpb = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    )
-    open_cost = _size_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", str(4 << 20)),
-        default=4 << 20,
-    )
-    def _int_conf(key: str) -> int:
-        # optional typed confs raise on get() when unset (and validate
-        # any default passed in), so probe defensively
-        try:
-            v = spark.conf.get(key)
-        except Exception:
-            return 0
-        try:
-            return int(v) if v else 0
-        except (TypeError, ValueError):
-            return 0
-
-    min_part = _int_conf("spark.sql.files.minPartitionNum")
-    if min_part <= 0:
-        min_part = _int_conf("spark.sql.leafNodeDefaultParallelism")
-    if min_part <= 0:
-        min_part = spark.sparkContext.defaultParallelism
-    total = sum(sizes) + len(sizes) * open_cost
-    bytes_per_core = total // max(min_part, 1)
-    max_split = min(maxpb, max(open_cost, bytes_per_core))
-    max_split = max(max_split, 1)
-    # parquet is splittable: each file becomes ceil(size / max_split)
-    # splits, then splits are greedily packed (sorted desc, openCost
-    # charged per split, partition closed when it would exceed max_split)
-    splits: list[int] = []
-    for sz in sizes:
-        off = 0
-        while off < sz:
-            splits.append(min(max_split, sz - off))
-            off += max_split
-        if sz == 0:
-            splits.append(0)
-    splits.sort(reverse=True)
-    parts = 0
-    cur = 0
-    for s in splits:
-        if cur + s > max_split and cur > 0:
-            parts += 1
-            cur = 0
-        cur += s + open_cost
-    if cur > 0:
-        parts += 1
-    return parts
 
 
 def spread_scan_scatter(df, key: str):
@@ -264,12 +137,38 @@ def spread_scan_scatter(df, key: str):
     exchange (what the aligned spread_scan does) makes every consumer
     re-run the whole hashing pass instead of reading the shuffle files
     once (measured: dedup_minhash_lsh 6.2 s → 21 s with the aligned
-    form inside _doc_sets, back to 2.9 s with this one). Same
-    input-size gate: no-op whenever the scan already feeds the cores."""
+    form inside _doc_sets, back to 2.9 s with this one). Same gate:
+    it asks the planned scan, works on any filesystem and on in-memory
+    or RDD-backed leaves, and returns an input whose plan holds an
+    exchange unchanged."""
     if not _scan_is_compact(df):
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par, F.xxhash64(F.col(key)))
+
+
+def _scan_is_compact(df) -> bool:
+    """The gate of spread_scan and spread_scan_scatter: True when the
+    planned scan of ``df`` has fewer partitions than defaultParallelism,
+    i.e. the source cannot feed every core by itself. The count is the
+    planner's own (``df.rdd.getNumPartitions()``), whatever the leaf:
+    a file scan, an in-memory cached scan, a LocalTableScan or an RDD
+    scan. An input whose executed plan is adaptive or holds an exchange
+    returns False: its partition count is only known after the stages
+    below it run. Under
+    AQE (the session default) a plan with a subquery, or one that reads
+    a cached plan with an exchange, is adaptive too, so the gate never
+    runs a job."""
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan" or "Exchange" in name:
+            return False
+        it = node.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return df.rdd.getNumPartitions() < df.sparkSession.sparkContext.defaultParallelism
 
 
 def iter_checkpoint(df, eager: bool = True):

@@ -39,6 +39,17 @@ def local_master_conf(env: Mapping[str, str], cwd: str) -> dict[str, str]:
     return conf
 
 
+def default_driver_memory(page_size: int, phys_pages: int) -> str:
+    """The driver heap when SPARK_DRIVER_MEMORY is unset: 48g, capped at
+    half the host's physical memory (``page_size * phys_pages`` bytes)
+    so a local session leaves room for its Python workers and other
+    processes. In whole megabytes. A cgroup or container memory limit
+    is not read: inside a container capped below half the host, set
+    SPARK_DRIVER_MEMORY."""
+    half_mb = page_size * phys_pages // 2 // (1 << 20)
+    return f"{min(48 << 10, half_mb)}m"
+
+
 def get_spark(app_name: str = "vedb-gaze-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -62,8 +73,16 @@ def get_spark(app_name: str = "vedb-gaze-spark", shuffle_partitions: int | None 
         # isolated: the r6 eviction signature again, one size up.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         # local mode runs executors inside the driver JVM: size the heap
-        # for all $SPARK_GRAFT_CPUS task threads, not a lone driver
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # for all $SPARK_GRAFT_CPUS task threads, not a lone driver, but
+        # within the host (a 48g heap grew a tier-1 JVM on a 16 GB host
+        # to 7.7 GB RSS before the kernel's OOM killer stopped it)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE"), os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         # JIT CodeCache headroom: measured 112 MB of compiled nmethods
         # after only 40 small-SF registry queries (r9 probe), so the
         # full 113-query sf0.1 session plausibly crosses the 240 MB
