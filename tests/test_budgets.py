@@ -33,8 +33,11 @@ def test_apply_per_key_kernel_stage_task_budget(spark, sf_dir, kernel_stage_task
 
 
 # Jobs per call at the test settings (8 shuffle partitions, sf0.01),
-# measured with 4 and 8 local cores: trade_pagerank 36, trade_hits 72.
-GRAPH_JOB_BUDGET = {"trade_pagerank": 36, "trade_hits": 72}
+# measured with 4 and 8 local cores once load_table read each table's
+# schema from its parquet footer (no inference job; each face loads 2
+# tables): trade_pagerank 34, trade_hits 70. Before that they ran 36
+# and 72.
+GRAPH_JOB_BUDGET = {"trade_pagerank": 34, "trade_hits": 70}
 
 
 def _two_calls(spark, sf_dir, job_group_run, key):
@@ -55,15 +58,17 @@ def test_graph_faces_repeat_the_same_jobs(spark, sf_dir, job_group_run, key):
 # Jobs per call at the same settings, measured with 4 and 8 local cores
 # once every trainer combined its task partials through
 # operators/similarity.py:_task_partials (one job per Lloyd's
-# iteration; init rows sorted on the driver): ann_ivf_trained 9,
-# ann_ivf_kmeanspar 14, ann_pq 12, ann_ivfpq_trained 15, embed_pca 3.
-# Before that, the same faces ran 15, 18, 18, 27 and 3.
+# iteration; init rows sorted on the driver) and load_table read each
+# table's schema from its parquet footer (each face loads 1 table):
+# ann_ivf_trained 8, ann_ivf_kmeanspar 13, ann_pq 11, ann_ivfpq_trained
+# 14, embed_pca 2. With an inference job per loaded table they ran 9,
+# 14, 12, 15 and 3; before the task partials, 15, 18, 18, 27 and 3.
 TRAINER_JOB_BUDGET = {
-    "ann_ivf_trained": 9,
-    "ann_ivf_kmeanspar": 14,
-    "ann_pq": 12,
-    "ann_ivfpq_trained": 15,
-    "embed_pca": 3,
+    "ann_ivf_trained": 8,
+    "ann_ivf_kmeanspar": 13,
+    "ann_pq": 11,
+    "ann_ivfpq_trained": 14,
+    "embed_pca": 2,
 }
 
 
@@ -74,13 +79,15 @@ def test_trained_faces_repeat_the_same_jobs(spark, sf_dir, job_group_run, key):
 
 
 # Jobs per call at the same settings, measured with 4 and 8 local cores
-# (the plan build, then the final collect): bpe_stats 59 + 4, semdedup
-# 18 + 3, dedup_clusters 12 + 2, quality_classifier_trained 28 + 1.
+# (the plan build, then the final collect): bpe_stats 58 + 4, semdedup
+# 17 + 3, dedup_clusters 11 + 2, quality_classifier_trained 27 + 1.
+# Each face loads 1 table; with an inference job per loaded table the
+# builds ran 59, 18, 12 and 28.
 CORPUS_JOB_BUDGET = {
-    "bpe_stats": 63,
-    "semdedup": 21,
-    "dedup_clusters": 14,
-    "quality_classifier_trained": 29,
+    "bpe_stats": 62,
+    "semdedup": 20,
+    "dedup_clusters": 13,
+    "quality_classifier_trained": 28,
 }
 
 

@@ -131,6 +131,20 @@ def test_scan_split_math_is_not_mirrored():
     assert hits == [], "\n".join(hits)
 
 
+def test_footer_schema_read_is_not_copied():
+    """A table's schema is read from its parquet footer through Spark's
+    own converter in one module under vedb_gaze_spark/
+    (sources/tables.py:_read_parquet)."""
+    pkg = Path(__file__).resolve().parents[1] / "vedb_gaze_spark"
+    for name in ("readSchemaFromFooter", "ParquetToSparkSchemaConverter"):
+        modules = [
+            str(path.relative_to(pkg))
+            for path in sorted(pkg.rglob("*.py"))
+            if name in path.read_text()
+        ]
+        assert len(modules) == 1, (name, modules)
+
+
 def test_exact_jaccard_rounds_half_up_like_duckdb():
     """1 shared element in a union of 128: 1/128 = 0.0078125 exactly.
     DuckDB's round() gives 0.007813 (HALF_UP); Python's round and

@@ -103,6 +103,95 @@ def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
             q.stop()
 
 
+def test_load_table_runs_no_job_and_infers_the_same_schema(spark, sf_dir, tmp_path):
+    """load_table reads each table's schema from its parquet footer on
+    the driver: the call runs no job, and the schema and rows equal an
+    inferring read's (with the same events ts fix-up), for every table
+    and for the footer layouts an inferring read handles differently."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from vedb_gaze_spark.sources.tables import TABLES, load_table
+    from vedb_gaze_spark.tracing import trace
+
+    def check(name, d, rows=False):
+        t = trace(spark, lambda: load_table(spark, name, d))
+        inferred = spark.read.parquet(os.path.join(d, f"{name}.parquet"))
+        if dict(inferred.dtypes).get("ts") == "bigint":  # a NANOS events ts
+            inferred = inferred.withColumn(
+                "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
+            )
+        assert t.jobs == 0, (d, name, t.jobs)
+        assert t.result.schema == inferred.schema, (d, name)
+        if rows:
+            assert sorted(t.result.collect()) == sorted(inferred.collect()), (d, name)
+
+    for name in TABLES:
+        check(name, sf_dir)
+
+    micros = [1_700_000_000_000_000, 1_700_000_123_456_789]
+    for unit, vals in (("ns", [m * 1000 for m in micros]), ("us", micros)):
+        d = str(tmp_path / unit)
+        os.makedirs(d)
+        ts = pa.array(vals, pa.timestamp(unit))
+        pq.write_table(
+            pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": ts}),
+            os.path.join(d, "events.parquet"),
+        )
+        check("events", d, rows=True)
+
+    d = str(tmp_path / "required")
+    os.makedirs(d)
+    required = pa.schema([pa.field("r_regionkey", pa.int64(), nullable=False),
+                          pa.field("r_name", pa.string())])
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["a", None]}, schema=required),
+        os.path.join(d, "region.parquet"),
+    )
+    check("region", d, rows=True)
+
+    # Spark's writer keeps its row metadata (here a field comment) in the
+    # footer, and a directory table carries a _SUCCESS marker to skip.
+    d = str(tmp_path / "spark")
+    commented = StructType([StructField("o_orderkey", LongType(), True,
+                                        {"comment": "order id"})])
+    spark.createDataFrame([(1,), (2,)], commented).coalesce(1).write.parquet(
+        os.path.join(d, "orders.parquet")
+    )
+    check("orders", d, rows=True)
+    assert load_table(spark, "orders", d).schema["o_orderkey"].metadata == {
+        "comment": "order id"
+    }
+
+    d = str(tmp_path / "two_files")
+    table = os.path.join(d, "customer.parquet")
+    os.makedirs(table)
+    for i in (0, 1):
+        pq.write_table(
+            pa.table({"c_custkey": pa.array([i], pa.int64())}),
+            os.path.join(table, f"part-{i}.parquet"),
+        )
+    open(os.path.join(table, "_SUCCESS"), "w").close()
+    check("customer", d, rows=True)
+    assert load_table(spark, "customer", d).count() == 2
+
+    # A partitioned lake table: the partition column still comes from
+    # the path, not the footer.
+    d = str(tmp_path / "partitioned")
+    spark.range(6).selectExpr("id AS n_nationkey", "id % 2 AS n_regionkey").write.partitionBy(
+        "n_regionkey"
+    ).parquet(os.path.join(d, "nation.parquet"))
+    check("nation", d, rows=True)
+
+    # No data file to read a footer from: Spark's own read raises.
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, "nation", str(tmp_path / "missing"))
+
+
 def test_pii_scrub_redacts_planted_pii_identically_to_oracle(spark, duck):
     """The corpus has no PII, so the gate only proves the no-op. Plant
     real emails/phones/IPs and verify (a) every class is redacted with
